@@ -18,7 +18,9 @@ import graft.operators.TpchProject
   *            comma = intersection, `tag:NAME` config tags,
   *            `state:modified`/`state:new` against --state; --exclude
   *            subtracts its selection. Every run writes
-  *            WAREHOUSE/manifest.json for the next --state.)
+  *            WAREHOUSE/manifest.json for the next --state. --threads
+  *            caps how many dependency-ready models build at once;
+  *            absent, the session's defaultParallelism applies.)
   *   build   dbt build: run the DAG, then every declared test (exit 1 on
   *           any test failure)
   *   test    [--project ...] [--dir PATH] [--target ...]
@@ -157,6 +159,7 @@ object EngineCli {
       "--select and --selector are mutually exclusive")
     def selection: Option[String] = opts.get("select")
       .orElse(runner.resolveSelector(opts.get("selector")))
+    val threads: Option[Int] = opts.get("threads").map(_.toInt)
 
     verb match {
       case "run-operation" =>
@@ -179,7 +182,7 @@ object EngineCli {
       case "run" =>
         val results = runner.run(spark, selection,
           runResultsPath = Some(s"$warehouse/run_results.json"),
-          threads = opts.getOrElse("threads", "1").toInt,
+          threads = threads,
           exclude = opts.get("exclude"),
           state = opts.get("state"),
           manifestPath = Some(s"$warehouse/manifest.json"),
@@ -197,7 +200,7 @@ object EngineCli {
             println(s"retrying: $sel")
             printResults(runner.run(spark, Some(sel),
               runResultsPath = Some(s"$warehouse/run_results.json"),
-              threads = opts.getOrElse("threads", "1").toInt))
+              threads = threads))
         }
       case "show" =>
         // dbt show: preview a model's rows without materializing it as
@@ -207,7 +210,8 @@ object EngineCli {
         val name = opts.getOrElse("select", throw new IllegalArgumentException(
           "show requires --select MODEL"))
         val limit = opts.getOrElse("limit", "5").toInt
-        runner.run(spark, Some(s"+$name"), exclude = Some(name))
+        runner.run(spark, Some(s"+$name"), threads = threads,
+          exclude = Some(name))
         runner.preview(spark, name).limit(limit).show(limit, truncate = false)
       case "clone" =>
         // dbt clone: re-point this target's relations at another
@@ -236,7 +240,8 @@ object EngineCli {
         }
         if (snaps.isEmpty) println("0 snapshots in project")
         else printResults(runner.run(spark,
-          select = Some(snaps.map("+" + _).mkString(" "))))
+          select = Some(snaps.map("+" + _).mkString(" ")),
+          threads = threads))
       case "test" =>
         // dbt-build semantics: tests on model relations need the models
         // materialized in THIS session (the in-memory catalog does not
@@ -246,7 +251,7 @@ object EngineCli {
         // source-anchored tests (dotted relations) always run.
         val sel = opts.get("select")
         val built = runner.run(spark, sel,
-          threads = opts.getOrElse("threads", "1").toInt)
+          threads = threads)
         val inScope: String => Boolean = sel match {
           case None => _ => true
           case Some(_) =>
@@ -321,7 +326,7 @@ object EngineCli {
         if (rows.exists(_.getString(3) == "error")) sys.exit(1)
       case "ls" =>
         // S7: `SHOW TABLES IN SCHEMA` (tasty_bytes_example_query.sql:2).
-        runner.run(spark)
+        runner.run(spark, threads = threads)
         spark.sql("SHOW TABLES").collect().foreach { r =>
           println(f"${r.getString(0)}%-12s ${r.getString(1)}%-36s " +
             f"temp=${r.getBoolean(2)}")
@@ -333,7 +338,7 @@ object EngineCli {
         // with warn-severity printed as WARN exactly like `test`.
         val results = runner.run(spark, opts.get("select"),
           runResultsPath = Some(s"$warehouse/run_results.json"),
-          threads = opts.getOrElse("threads", "1").toInt)
+          threads = threads)
         printResults(results)
         val report = runner.testReport(spark).collect()
         val severity = runner.testSeverity
@@ -362,7 +367,7 @@ object EngineCli {
       case "docs" =>
         // dbt docs generate: manifest.json (nodes + parent map) and
         // catalog.json (live column schemas) after materializing.
-        runner.run(spark, opts.get("select"))
+        runner.run(spark, opts.get("select"), threads = threads)
         runner.writeDocs(spark, s"$warehouse/manifest_docs.json",
           s"$warehouse/catalog.json")
         println(s"wrote $warehouse/manifest_docs.json and " +
@@ -372,7 +377,8 @@ object EngineCli {
         val seedNames = project.models.collect { case s: SeedModel => s.name }
         if (seedNames.isEmpty) println("0 seeds in project")
         else printResults(
-          runner.run(spark, select = Some(seedNames.mkString(" "))))
+          runner.run(spark, select = Some(seedNames.mkString(" ")),
+            threads = threads))
       case other =>
         System.err.println(s"unknown verb: $other (expected run|build|" +
           "test|compile|deps|freshness|ls|seed|snapshot|retry|show|docs|" +

@@ -1363,24 +1363,26 @@ final class Runner(
     out
   }
 
-  /** O3/O4: toposorted materialization of the selected subgraph.
+  /** O3/O4: materialization of the selected subgraph by one scheduler
+    * that runs every dependency-ready node concurrently on a fixed pool.
+    * Its width is `threads` when given (dbt's `--threads`) and the
+    * session's `defaultParallelism` otherwise: a DAG of small models is
+    * latency- not throughput-bound (per-job, planning and commit
+    * overhead), Spark job submission is thread-safe and local[N] has the
+    * slots, so independent nodes overlap instead of queueing.
     *
-    * Both execution widths share dbt's failure semantics: a failed node
-    * marks its (transitive) selected descendants "skipped" — they would
+    * dbt's failure semantics hold at every width: a failed node marks
+    * its (transitive) selected descendants "skipped" — they would
     * otherwise rebuild on a stale relation left by a previous run and
     * report a bogus success — while independent branches still complete.
-    * `threads > 1` runs dependency-ready nodes concurrently on a fixed
-    * pool (dbt's `--threads`; Spark job submission is thread-safe and
-    * local[N] has the slots — a DAG of small models is latency- not
-    * throughput-bound, so width pays off directly). The first error is
-    * rethrown after the run drains. Results are in topological order
-    * either way.
+    * The first error is rethrown after the run drains. Results are in
+    * topological order; `threads = Some(1)` builds one node at a time.
     */
   def run(
       spark: SparkSession,
       select: Option[String] = None,
       runResultsPath: Option[String] = None,
-      threads: Int = 1,
+      threads: Option[Int] = None,
       exclude: Option[String] = None,
       state: Option[String] = None,
       manifestPath: Option[String] = None,
@@ -1403,10 +1405,9 @@ final class Runner(
     // consumers); they still participate in the DAG for selection.
     val chosen = (n: String) => selected(n) && !isEphemeral(n)
     val ordered = Dag.toposort(deps).filter(chosen)
-    val results =
-      if (threads <= 1) runSerial(spark, ordered, chosen, fullRefresh,
-        failFast)
-      else runParallel(spark, ordered, threads, fullRefresh, failFast)
+    val results = runParallel(spark, ordered,
+      threads.getOrElse(spark.sparkContext.defaultParallelism), fullRefresh,
+      failFast)
     // dbt on-run-end: once per invocation, AFTER the node loop — node
     // failures do NOT skip it (the audit row must record failed runs
     // too); the node-error throw below still fails the invocation.
@@ -1576,30 +1577,18 @@ final class Runner(
     }
   }
 
-  private def runSerial(spark: SparkSession, ordered: Seq[String],
-      chosen: String => Boolean, fullRefresh: Boolean,
-      failFast: Boolean): Seq[NodeResult] = {
-    val bad = scala.collection.mutable.Set.empty[String] // failed or skipped
-    var aborted = false
-    ordered.map { n =>
-      if (aborted || execDeps(n).filter(chosen).exists(bad)) {
-        bad += n
-        NodeResult(n, relationOf(byName(n)), "skipped", 0,
-          Some(if (aborted) "fail-fast" else "upstream failed"))
-      } else {
-        val r = materializeNode(spark, n, fullRefresh)
-        if (r.status != "success") {
-          bad += n
-          if (failFast) aborted = true
-        }
-        r
-      }
-    }
-  }
-
+  /** [[run]]'s scheduler: a node is submitted to a `threads`-wide pool
+    * once all its selected upstreams have finished. Node bodies cannot
+    * race session conf: the only `conf.set` a node reaches is the sticky
+    * dynamic-overwrite set in [[CatalogMaterializer]]'s
+    * `materializeIncremental`, which only ever writes one value, and
+    * `EventsLayout.withNanosFlag` runs only in [[registerSources]], on
+    * the caller thread, before the pool starts. Each worker names its
+    * Spark jobs after its node (`spark.job.description`): concurrent
+    * nodes' jobs interleave, so time order no longer attributes them. */
   private def runParallel(spark: SparkSession, ordered: Seq[String],
       threads: Int, fullRefresh: Boolean,
-      failFast: Boolean = false): Seq[NodeResult] = {
+      failFast: Boolean): Seq[NodeResult] = {
     import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, Executors}
     val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
     val chosen = ordered.toSet
@@ -1612,46 +1601,45 @@ final class Runner(
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val results = new ConcurrentHashMap[String, NodeResult]()
     val done = new CountDownLatch(ordered.size)
-    val pool = Executors.newFixedThreadPool(threads)
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    val pool = Executors.newFixedThreadPool(math.max(1, threads), r => {
+      val t = new Thread(r, "graft-dag")
+      t.setDaemon(true) // as Par.run: never hold the JVM open
+      t
+    })
 
-    def finish(name: String, r: NodeResult): Unit = {
+    def submit(name: String): Unit = pool.execute { () =>
+      // Every node counts the latch down exactly once: a FATAL Throwable
+      // (OOM, StackOverflowError from a deep plan) or a throw on the skip
+      // path escaping here would kill the worker first, and the
+      // invocation would hang instead of failing.
+      def skipped(why: String) =
+        NodeResult(name, relationOf(byName(name)), "skipped", 0, Some(why))
+      val r =
+        try {
+          sc.setJobDescription(name)
+          if (aborted.get()) skipped("fail-fast")
+          else if (execDeps(name).exists(d =>
+              Option(results.get(d)).exists(_.status != "success")))
+            skipped("upstream failed")
+          else materializeNode(spark, name, fullRefresh)
+        } catch {
+          case t: Throwable => NodeResult(name, relationOf(byName(name)),
+            "error", 0, Some(t.toString))
+        } finally sc.setJobDescription(callerDescription)
+      if (r.status == "error" && failFast) aborted.set(true)
       results.put(name, r)
       done.countDown()
       dependents.getOrElse(name, Nil).foreach { d =>
-        val left = remaining.compute(d, (_, v) => v - 1)
-        if (left == 0) submit(d)
-      }
-    }
-    def skip(name: String, why: String): Unit =
-      finish(name, NodeResult(name, relationOf(byName(name)),
-        "skipped", 0, Some(why)))
-    def submit(name: String): Unit = pool.execute { () =>
-      val upstreamBad = execDeps(name).filter(chosen).exists { d =>
-        val r = results.get(d)
-        r != null && r.status != "success"
-      }
-      if (aborted.get()) skip(name, "fail-fast")
-      else if (upstreamBad) skip(name, "upstream failed")
-      else {
-        // materializeNode catches Exception, but a FATAL Throwable
-        // (OOM, StackOverflowError from a deep plan) escaping here
-        // would kill the worker BEFORE finish() — the latch never
-        // drains and the invocation hangs instead of failing.
-        val r =
-          try materializeNode(spark, name, fullRefresh)
-          catch {
-            case t: Throwable =>
-              NodeResult(name, relationOf(byName(name)), "error", 0,
-                Some(t.toString))
-          }
-        if (r.status != "success" && failFast) aborted.set(true)
-        finish(name, r)
+        if (remaining.compute(d, (_, v) => v - 1) == 0) submit(d)
       }
     }
 
-    ordered.filter(n => remaining.get(n) == 0).foreach(submit)
-    done.await()
-    pool.shutdown()
+    try {
+      ordered.filter(n => remaining.get(n) == 0).foreach(submit)
+      done.await()
+    } finally pool.shutdown() // an interrupted wait included
     ordered.map(results.get)
   }
 

@@ -348,7 +348,7 @@ object EngineQueries extends QueryPack {
         val r = TpchProject.runner(dir)
         val path = java.nio.file.Files.createTempDirectory("graft_rr8")
           .toString + "/run_results.json"
-        r.run(spark, runResultsPath = Some(path), threads = 4)
+        r.run(spark, runResultsPath = Some(path), threads = Some(4))
         spark.read.json(path)
           .select(explode(col("results")).as("n"))
           .select(col("n.name").as("model"),

@@ -509,4 +509,94 @@ class IncrementalSpec extends SparkSuite {
     assert(spark.table(rel).select("k").collect()
       .map(_.getString(0)).toSeq == Seq("plain"))
   }
+
+  test("the four incremental strategies refresh concurrently to the " +
+      "marts of a full rebuild") {
+    // Orders arrive with ever larger keys, ten to a customer, so each
+    // slice updates one existing customer and adds new ones; events
+    // arrive one new day per slice.
+    def orders(keys: Range) = keys.map(k => (k.toLong, k / 10L, k * 1.25))
+      .toDF("o_orderkey", "o_custkey", "o_totalprice")
+    def events(day: Int) = (0 until 24 by 5)
+      .map(h => (f"2024-01-$day%02d $h%02d:30:00",
+        if (h % 2 == 0) "view" else "click", day + h / 8.0))
+      .toDF("tss", "event_type", "value")
+      .select(to_timestamp(col("tss")).as("ts"), col("event_type"),
+        col("value"))
+    var srcOrders = orders(1 to 40)
+    var srcEvents = events(1)
+    val models = Seq(
+      SqlModel("cs_events_daily",
+        """SELECT day, event_type, COUNT(*) AS n_events,
+          |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(38,4))
+          |    AS sum_value
+          |FROM (SELECT CAST(CAST(date_trunc('day', ts) AS DATE) AS STRING)
+          |        AS day, event_type, value
+          |      FROM {{ source('ev', 'events') }}) e
+          |WHERE {{ incremental_filter('day') }}
+          |GROUP BY day, event_type""".stripMargin,
+        Materialization.IncrementalByPartition(Seq("day"))),
+      SqlModel("cs_customer_activity",
+        """SELECT o_custkey AS customer_id, COUNT(*) AS n_orders,
+          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(38,2))
+          |    AS total_spend,
+          |  MAX(o_orderkey) AS o_orderkey
+          |FROM {{ source('tpch', 'orders') }}
+          |WHERE o_custkey IN (
+          |  SELECT o_custkey FROM {{ source('tpch', 'orders') }}
+          |  WHERE {{ incremental_filter('o_orderkey') }})
+          |GROUP BY o_custkey""".stripMargin,
+        Materialization.IncrementalByKey(Seq("customer_id"))),
+      SqlModel("cs_events_hourly_mb",
+        """SELECT date_trunc('hour', ts) AS hour, COUNT(*) AS n_events,
+          |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(38,4))
+          |    AS sum_value
+          |FROM {{ source('ev', 'events') }}
+          |GROUP BY 1""".stripMargin,
+        Materialization.Microbatch("hour", "day"),
+        eventTime = Some("hour")),
+      SqlModel("cs_customer_orders_snapshot",
+        """SELECT o_custkey AS customer_id, COUNT(*) AS n_orders,
+          |  MAX(o_orderkey) AS updated_at
+          |FROM {{ source('tpch', 'orders') }}
+          |GROUP BY o_custkey""".stripMargin,
+        Materialization.Snapshot("customer_id", "updated_at")))
+    val project = Project(Seq(
+      SourceDef("tpch", "orders", _ => srcOrders),
+      SourceDef("ev", "events", _ => srcEvents,
+        eventTimeField = Some("ts"))), models)
+    def succeeded(results: Seq[NodeResult]) = {
+      assert(results.map(_.name).toSet == models.map(_.name).toSet)
+      assert(results.forall(_.status == "success"), results.mkString("\n"))
+    }
+    // A snapshot is compared by its current rows.
+    def current(r: Runner, m: String) = {
+      val t = r.table(spark, m)
+      if (t.columns.contains("valid_to")) t.filter(col("valid_to").isNull)
+      else t
+    }
+    val mat = new CatalogMaterializer
+    def runner(t: Target) = {
+      val r = new Runner(project, t, mat)
+      // A relation an earlier JVM left in the warehouse would be adopted
+      // (a snapshot keeps its history under --full-refresh): drop them.
+      models.foreach(m => mat.dropRelation(spark, r.relationOf(m)))
+      r
+    }
+    val dev = runner(Target.dev)
+    succeeded(dev.run(spark, fullRefresh = true))
+    (1 to 2).foreach { k =>
+      srcOrders = srcOrders.union(orders(40 * k + 1 to 40 * k + 40))
+      srcEvents = srcEvents.union(events(1 + k))
+      succeeded(dev.run(spark))
+      val rebuild = runner(Target(s"cs_rebuild$k", s"cs_rebuild$k"))
+      succeeded(rebuild.run(spark, fullRefresh = true))
+      models.map(_.name).foreach { m =>
+        val got = current(dev, m)
+        val want = current(rebuild, m).select(got.columns.map(col): _*)
+        assert(got.count() > 0 && got.count() == want.count() &&
+          got.exceptAll(want).isEmpty, s"$m after refresh $k")
+      }
+    }
+  }
 }

@@ -149,7 +149,8 @@ class RunnerSpec extends SparkSuite {
         new PathMaterializer(
           Files.createTempDirectory("graft-ff-m").toString))
       intercept[RuntimeException] {
-        r.run(spark, runResultsPath = Some(rr), failFast = ff)
+        r.run(spark, runResultsPath = Some(rr), threads = Some(1),
+          failFast = ff)
       }
       r.retrySelection(rr)
     }
@@ -282,13 +283,34 @@ class RunnerSpec extends SparkSuite {
 
   test("parallel run (threads=4) produces the same marts as sequential") {
     val runner = TpchProject.runner(dir)
-    val results = runner.run(spark, threads = 4)
+    val results = runner.run(spark, threads = Some(4))
     assert(results.size == TpchProject.project(dir).models.size)
     assert(results.forall(_.status == "success"))
     // topological order preserved in the report
     assert(results.map(_.name).indexOf("stg_orders") <
       results.map(_.name).indexOf("customer_order_metrics"))
     assert(runner.table(spark, "sales_by_region").count() == 25)
+  }
+
+  test("the default width overlaps independent nodes and names their jobs") {
+    // Each build waits for the other at one barrier: a run that builds
+    // one node at a time times out there and fails both.
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val descriptions =
+      new java.util.concurrent.ConcurrentHashMap[String, String]
+    def meet(name: String) = DfModel(name, Nil, (s, _) => {
+      descriptions.put(name,
+        s.sparkContext.getLocalProperty("spark.job.description"))
+      barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      s.range(1).toDF("x")
+    }, Materialization.View)
+    val runner = new Runner(Project(Nil, Seq(meet("ov_a"), meet("ov_b"))),
+      Target.dev, new PathMaterializer(
+        Files.createTempDirectory("graft-overlap").toString))
+    assert(runner.run(spark).map(r => r.name -> r.status) ==
+      Seq("ov_a" -> "success", "ov_b" -> "success"))
+    assert(descriptions.get("ov_a") == "ov_a" &&
+      descriptions.get("ov_b") == "ov_b")
   }
 
   test("parallel run skips downstream of a failure but finishes siblings") {
@@ -305,7 +327,7 @@ class RunnerSpec extends SparkSuite {
     val runner = new Runner(bad, Target.dev,
       new PathMaterializer("/tmp/graft-test/marts-par"))
     val e = intercept[RuntimeException] {
-      runner.run(spark, threads = 4)
+      runner.run(spark, threads = Some(4))
     }
     assert(e.getMessage.contains("boom2"))
     // independent branch still materialized (nation = 25 rows)
@@ -328,7 +350,7 @@ class RunnerSpec extends SparkSuite {
     val runner = new Runner(bad, Target.dev,
       new PathMaterializer("/tmp/graft-test/marts-ser"))
     val e = intercept[RuntimeException] {
-      runner.run(spark, threads = 1)
+      runner.run(spark, threads = Some(1))
     }
     assert(e.getMessage.contains("boom_s"))
     // independent branch still materialized (nation = 25 rows)…
