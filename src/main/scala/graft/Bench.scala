@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** The BENCH_r{N} round slot this run belongs to — pure so the
@@ -64,37 +63,7 @@ object Bench {
       System.err.println(s"no queries match filter ${args.headOption}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions are DECOUPLED from the probe's core count
-    // (round-17 scaling-block finding: tying them to $SPARK_GRAFT_CPUS
-    // made the low-core probe trade parallelism for task-count savings
-    // one-for-one — every ratio ≈ 1, the instrument measured nothing).
-    // Fixed initial partitions + AQE coalescing keep the PLAN identical
-    // across probe core counts, so the timing ratio now reflects
-    // parallelism alone. 32 matches the main run's historic value, so
-    // 32-core numbers stay comparable round-over-round; clusters
-    // override via SPARK_GRAFT_SHUFFLE_PARTITIONS (size to data/
-    // advisory-partition-size, not core count — guide §2.2).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // AQE coalescing must respect the advisory partition SIZE, not
-      // stop at defaultParallelism (guide §2.2 "fewer, larger reduce
-      // partitions"; Spark's own conf doc recommends false). With the
-      // default (true), every KB-sized intermediate shuffle in the
-      // store protocols still fanned out to 32 post-shuffle tasks of
-      // pure scheduling overhead. Size-derived, not core-count-derived:
-      // at 100 TB the same setting yields advisory-sized partitions.
-      // Measured on a 14-gate subset at sf0.1 min-of-3: 87.6→78.1 s
-      // (st10 −22%, p14 −13%, t21 −21%, d02 −19%), zero regressions.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.EngineSession()
     // Layout canary (footer-only): name drifted testdata columns loudly
     // up front instead of benching the whole inventory against a broken
     // layout.
@@ -161,6 +130,7 @@ object Bench {
     // (or a core-count probe that silently didn't take) is self-evident
     // from the artifact instead of needing a host inspection.
     val parallelism = spark.sparkContext.defaultParallelism
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$passes,"parallelism":$parallelism,"shuffle_partitions":$shufflePartitions$errJson}"""
     println(line)
     // A filtered run is a local probe — never let it clobber the

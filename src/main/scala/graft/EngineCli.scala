@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.model._
 import graft.operators.TpchProject
 
@@ -86,20 +85,8 @@ object EngineCli {
     }
     val warehouse = opts.getOrElse("warehouse", "/tmp/graft-warehouse")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-engine")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      // Respect the advisory partition size when AQE coalesces (same
-      // engine posture as Bench — see the rationale there).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.EngineSession(
+      "spark.sql.warehouse.dir" -> warehouse)
 
     val materializer: Materializer = opts.getOrElse("materializer", "catalog") match {
       case "path" => new PathMaterializer(s"$warehouse/path-marts")

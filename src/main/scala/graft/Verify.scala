@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -16,18 +15,7 @@ object Verify {
       case Some(re) => val r = re.r; s => r.findFirstIn(s).isDefined
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Respect the advisory partition size when AQE coalesces (same
-      // engine posture as Bench — see the rationale there).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.EngineSession()
     // Layout canary: one readable line per drifted testdata assumption
     // (footer-only reads), so schema drift never surfaces as a pile of
     // cryptic per-query failures. Warn-and-continue — see SchemaCanary.

@@ -12,7 +12,8 @@ package graft.core
   * Semantics: runs every thunk, waits for ALL of them (even when one
   * fails — a half-started sibling write must finish or fail on its own
   * before the caller unwinds, never race a caller's cleanup), then
-  * rethrows the first failure. Plain threads, one per thunk: callers
+  * rethrows the first failure with every other branch's failure attached
+  * as suppressed, so no branch's error is lost. Plain threads, one per thunk: callers
   * pass 2–4 thunks, each seconds long, so pooling would buy nothing.
   * Spark job-group/description local properties are inherited by child
   * threads (InheritableThreadLocal), so UI attribution is preserved.
@@ -36,6 +37,10 @@ object Par {
       t
     }
     ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
   }
 }

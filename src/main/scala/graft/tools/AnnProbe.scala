@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{EngineSession, Tables}
 import graft.operators.{Similarity, VectorIndex}
 
 /** Amortization probe for the persisted ANN index (not part of the
@@ -16,11 +15,7 @@ import graft.operators.{Similarity, VectorIndex}
 object AnnProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
       val r = f

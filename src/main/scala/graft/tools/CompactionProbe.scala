@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, EngineSession, Tables}
 import graft.operators.{DedupStore, StoreCompaction, VectorIndex}
 
 /** Maintenance probe for [[StoreCompaction]] (manual:
@@ -21,11 +21,7 @@ object CompactionProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
       val r = f

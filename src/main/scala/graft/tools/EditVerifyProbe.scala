@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.core.Tables
+import graft.core.{EngineSession, Tables}
 import graft.operators.Dedup
 
 /** Scale probe for d23's two-stage edit-verified fuzzy dedup (manual:
@@ -18,10 +17,7 @@ object EditVerifyProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(1)
     val mode = args.lift(2).getOrElse("base")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     val base = Tables(spark, dir, "documents")
     val docs = mode match {
       case "salted" if k > 1 => ProbeCorpus.salted(base, k)

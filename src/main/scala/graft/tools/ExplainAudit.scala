@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
+import graft.core.EngineSession
 
 /** Dumps `explain(formatted)` for selected queries so plan properties —
   * parquet PushedFilters/ReadSchema pruning, broadcast vs sort-merge join
@@ -15,11 +15,7 @@ object ExplainAudit {
       else Seq("q01_pricing_summary", "q03_star_join_revenue",
         "q10_window_topk", "m02_order_lines_enriched", "d02_jaccard_pairs",
         "v01_cosine_topk", "t01_token_stats", "q02_filter_project")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = EngineSession()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try {

@@ -3,9 +3,9 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
+import graft.core.EngineSession
 
 /** Per-job wall-time attribution for one or more declared gates (guide
   * §1.1/§1.5: find where the time goes before touching anything). Runs
@@ -18,19 +18,26 @@ import graft.SparkEntry
   * Usage: `runMain graft.tools.GateProfile <sfDir> <query> [query ...]`
   */
 object GateProfile {
+
+  /** Seconds covered by at least one of the `[start, end]` millisecond
+    * intervals. Jobs overlap under `Par.run` and the concurrent DAG
+    * scheduler, so the plain sum of job durations can exceed the wall
+    * and drive the driver gap negative; the union cannot. An interval
+    * that never ended (`end <= start`) covers nothing. */
+  private[graft] def busySeconds(intervals: Seq[(Long, Long)]): Double = {
+    val (total, _) = intervals.filter { case (s, e) => e > s }.sortBy(_._1)
+      .foldLeft((0L, Long.MinValue)) { case ((sum, reach), (s, e)) =>
+        if (e <= reach) (sum, reach)
+        else (sum + e - math.max(s, reach), e)
+      }
+    total / 1e3
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
     require(names.nonEmpty, "usage: GateProfile <sfDir> <query> [query ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Match Bench's AQE posture so attributions mirror bench plans.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
 
     case class Job(id: Int, site: String, desc: String) {
       var start = 0L; var end = 0L
@@ -104,7 +111,8 @@ object GateProfile {
       Thread.sleep(500)
       val snap = jobs.synchronized { jobs.values.toSeq }
       val jobSum = snap.map(j => (j.end - j.start) / 1e3).sum
-      println(f"\n===== $name%s wall=$wall%.2f s jobs=${snap.size}%d jobSum=$jobSum%.2f s (gaps=${wall - jobSum}%.2f s driver/plan) =====")
+      val busy = busySeconds(snap.map(j => (j.start, j.end)))
+      println(f"\n===== $name%s wall=$wall%.2f s jobs=${snap.size}%d jobSum=$jobSum%.2f s busy=$busy%.2f s (gaps=${wall - busy}%.2f s driver/plan) =====")
       val bySite = snap.groupBy(j => if (j.desc.nonEmpty) j.desc else j.site)
         .map { case (site, js) =>
           (site, js.map(j => (j.end - j.start) / 1e3).sum, js.size,

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.core.Tables
+import graft.core.{EngineSession, Tables}
 import graft.operators.Similarity
 
 /** Scale probe for v23's k-NN graph (manual:
@@ -17,10 +16,7 @@ object KnnGraphProbe {
     // the v24 gate's shape; a number pins the bucket count (v23's).
     val nlist = args.lift(1).filter(_ != "auto").map(_.toInt)
     val nprobe = args.lift(2).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     val emb = Tables(spark, dir, "embeddings")
     val n = emb.count()
     val t0 = System.nanoTime()

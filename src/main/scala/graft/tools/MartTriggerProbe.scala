@@ -5,11 +5,11 @@ import java.nio.file.Files
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.Tables
+import graft.core.{EngineSession, Tables}
 import graft.streaming.EventsStream
 
 /** Per-trigger profile of the st04 incremental mart: pins the scaladoc
@@ -51,11 +51,7 @@ object MartTriggerProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(12)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     import spark.implicits._
 
     val ev = Tables(spark, dir, "events")

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.EngineSession
 import graft.model.CatalogMaterializer
 
 /** Cross-JVM durable-metastore round trip for the `__CURRENT` pointer
@@ -26,11 +27,8 @@ object MetastoreRoundTrip {
   private val rel = "msgate.mart"
 
   private def session(wh: String, derby: String): SparkSession =
-    SparkSession.builder().master("local[4]")
+    EngineSession.builder()
       .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$derby/metastore_db;create=true")
       .enableHiveSupport()

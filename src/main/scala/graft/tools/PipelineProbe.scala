@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, EngineSession, Tables}
 import graft.operators.CorpusPipeline
 
 /** Amortization probe for the composed corpus pipeline (not part of the
@@ -27,11 +26,7 @@ object PipelineProbe {
     // exact replicas die at the exact-dedup stage and the later
     // stages see empty batches — the round-10 caveat).
     val k = args.lift(1).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
       val r = f

@@ -1,14 +1,10 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{EngineSession, Tables}
 import graft.functions.Hashing
 object ProfileSig {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     val docs = Tables(spark, "/root/testdata/sf0.1", "documents")
     def t(l: String)(f: => Long): Unit = {
       f // warm

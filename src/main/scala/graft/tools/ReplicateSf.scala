@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.EngineSession
 
 /** Build a K×-replicated copy of a testdata directory with CONSISTENT
   * key offsets — the 10×-data bench input (sf0.1 × 10 ≈ sf1). Every
@@ -30,11 +32,7 @@ object ReplicateSf {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
 
     def write(name: String, df: DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{EngineSession, Tables}
 import graft.operators.{Dedup, Similarity}
 
 /** Scale probe: replicate the corpus K× (ids offset, so every replica is
@@ -18,11 +17,7 @@ object ScaleProbe {
     // Optional label filter (substring) — probe one operator at a high K
     // without paying for the whole suite.
     val only = args.lift(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     def t(label: String)(f: => Unit): Unit = {
       if (only.forall(label.contains)) {
         val t0 = System.nanoTime()

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.Caches
+import graft.core.{Caches, EngineSession}
 import graft.operators.Similarity
 
 /** Scale probe for d13 semantic dedup: the recipe's cost knob is k —
@@ -18,14 +16,7 @@ object SemanticProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val ks = args.lift(1).getOrElse("10,32").split(",").map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .appName("semantic-probe")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = emb.count()
     ks.foreach { k =>

@@ -1,7 +1,6 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{EngineSession, Tables}
 import graft.functions.Hashing
 import graft.operators.Dedup
 
@@ -10,10 +9,7 @@ import graft.operators.Dedup
   * cutoff (verification cost). */
 object ShingleSimhashProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     val docs = Tables(spark, "/root/testdata/sf0.1", "documents")
     val sh = docs.select(col("doc_id"),
         Hashing.hashedWordShingles(col("text"), 3).as("shingles"))

@@ -1,8 +1,10 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.EngineSession
 
 /** Spill-path probe: run the heaviest shuffle gates under a deliberately
   * memory-starved JVM and verify (a) Spark's spill machinery actually
@@ -64,29 +66,25 @@ object SpillProbe {
     val gates = args.lift(1).map(_.split(',').toSeq).getOrElse(
       Seq("d05_dup_clusters", "st05_stream_stream_join",
         "q11_window_running"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Low shuffle parallelism concentrates each shuffle partition's data;
     // a tiny memory fraction shrinks the execution pool. Together they
     // make the capped heap bind long before sf1 data fits.
     val shufflePartitions = sys.env.getOrElse("SPILL_SHUFFLE_PARTS", "8")
     val memFraction = sys.env.getOrElse("SPILL_MEM_FRACTION", "0.1")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.memory.fraction", memFraction)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // Streaming state is a different memory pool: the default HDFS-backed
     // provider keeps state maps IN executor memory (disk is checkpoint
     // only), so a capped heap binds on state size, not spill. SPILL
     // _ROCKSDB=1 swaps in the disk-backed provider — the configuration a
     // production deployment uses when state outgrows memory.
-    if (sys.env.get("SPILL_ROCKSDB").contains("1"))
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rocksDb =
+      if (sys.env.get("SPILL_ROCKSDB").contains("1"))
+        Seq("spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider"))
+      else Nil
+    val spark = EngineSession(Seq(
+      "spark.sql.shuffle.partitions" -> shufflePartitions,
+      "spark.memory.fraction" -> memFraction) ++ rocksDb: _*)
     val listener = new SpillListener
     spark.sparkContext.addSparkListener(listener)
     val heapGb = Runtime.getRuntime.maxMemory() / 1e9

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.Tables
+import graft.core.{EngineSession, Tables}
 import graft.streaming.EventsStream
 
 /** Streaming-tier scale probe: the 100 TB question for a stream is not
@@ -34,14 +34,9 @@ object StreamScaleProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val ks = args.lift(1).map(_.split(',').map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1, 10, 50))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Progress history must cover every trigger (one per replica).
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        (ks.max + 8).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Progress history must cover every trigger (one per replica).
+    val spark = EngineSession("spark.sql.streaming.numRecentProgressUpdates"
+      -> (ks.max + 8).toString)
     println(f"${"op"}%-22s ${"K"}%4s ${"events"}%9s ${"wall_s"}%8s " +
       f"${"stateRowsMax"}%13s ${"stateMB_max"}%12s")
     ks.foreach(k => runAt(spark, dir, k))

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, EngineSession, Tables}
 import graft.operators.CorpusPipeline
 
 /** Takedown COST CURVE for the full-recipe cascading delete (not part
@@ -47,11 +46,7 @@ object TakedownProbe {
     // changed documents; affected_batches at any depth is bounded by
     // one epoch's batch count instead of corpus-past-victim.
     val fenceEvery = args.lift(2).map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession()
     import spark.implicits._
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
