@@ -2,7 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Loader for the driver testdata layout (`TESTDATA.md`): one parquet file
   * per table under `\$dir/`. At 100 TB these would be partitioned parquet
@@ -175,30 +177,56 @@ trait QueryPack { def queries: Seq[Q] }
   * session that runs the whole query inventory (Bench, Verify) would
   * accumulate every pipeline's cache. Pipelines register their persists
   * here; the harness calls [[releaseAll]] between queries.
+  *
+  * Spark keys its cache by plan, not by DataFrame: two frames with the
+  * same plan share ONE cache entry. Registrations are therefore counted
+  * per entry — persisting a plan that is already registered adds a handle
+  * instead of a second `persist` (which Spark only warns about), and the
+  * entry is unpersisted when its last handle is released, so releasing
+  * one caller's handle never drops data another caller still reads.
   */
 object Caches {
-  private val registered =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private final class Entry(val plan: LogicalPlan, val cached: DataFrame) {
+    val handles = scala.collection.mutable.ArrayBuffer[DataFrame](cached)
+  }
+  private val entries = scala.collection.mutable.ArrayBuffer.empty[Entry]
 
-  def persist(df: DataFrame): DataFrame = synchronized {
-    val p = df.persist()
-    registered += p
-    p
+  def persist(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
+    synchronized {
+      entries.find(_.plan.sameResult(plan)) match {
+        case Some(e) =>
+          e.handles += df
+          // Re-pin an entry something outside the registry unpersisted.
+          if (df.storageLevel == StorageLevel.NONE) df.persist()
+        case None => entries += new Entry(plan, df.persist())
+      }
+    }
+    df
   }
 
-  /** Release ONE registered frame as soon as its last consumer ran —
+  /** Release ONE registered handle as soon as its last consumer ran —
     * what a long streamed ingest needs (one cached frame per
-    * micro-batch would otherwise accumulate until releaseAll). */
+    * micro-batch would otherwise accumulate until releaseAll). The cache
+    * entry is unpersisted with its last handle; a frame this registry
+    * does not hold is unpersisted directly. */
   def release(df: DataFrame): Unit = synchronized {
-    df.unpersist(blocking = false)
-    val i = registered.indexWhere(_ eq df)
-    if (i >= 0) registered.remove(i)
+    entries.indexWhere(_.handles.exists(_ eq df)) match {
+      case -1 => df.unpersist(blocking = false)
+      case i =>
+        val e = entries(i)
+        e.handles.remove(e.handles.indexWhere(_ eq df))
+        if (e.handles.isEmpty) {
+          entries.remove(i)
+          e.cached.unpersist(blocking = false)
+        }
+    }
   }
 
   def releaseAll(): Unit = {
     synchronized {
-      registered.foreach(_.unpersist(blocking = false))
-      registered.clear()
+      entries.foreach(_.cached.unpersist(blocking = false))
+      entries.clear()
     }
     // Checkpoint-truncated frames are the other class of gate-lifetime
     // pinned blocks; one harness call releases both.

@@ -147,9 +147,9 @@ object BlockStore {
     val occDoc = new Array[StoreRetention.DeleteStats](2)
     graft.core.Par.run(
       () => occDoc(0) = StoreRetention.deleteRows(spark, store.occRel,
-        ids, (t, v) => t("id") === v("doc_id")),
+        ids, Seq((t, v) => t("id") === v("doc_id"))),
       () => occDoc(1) = StoreRetention.deleteRows(spark, store.docsRel,
-        ids, (t, v) => t("id") === v("doc_id")))
+        ids, Seq((t, v) => t("id") === v("doc_id"))))
     val (occStats, docStats) = (occDoc(0), occDoc(1))
     val survOcc = spark.table(store.occRel)
     // Orphans: victim-kept fps with no surviving occurrence anywhere.
@@ -159,7 +159,7 @@ object BlockStore {
       .join(survOcc.select(col("fp")), Seq("fp"), "left_anti")
       .transform(graft.core.Checkpoints.truncate)
     val blockStats = StoreRetention.deleteRows(spark, store.blocksRel,
-      orphans, (t, v) => t("fp") === v("fp"))
+      orphans, Seq((t, v) => t("fp") === v("fp")))
     repairResurrected(spark, store, victimKept, survOcc)
     Seq(occStats, docStats, blockStats)
   }

@@ -409,23 +409,35 @@ object CorpusPipeline {
     *     the exact-dedup stage repairable without stored text (removing
     *     complete fingerprint groups never changes another group's
     *     min-id winner);
-    *  2. remove the family from the dedup store (shingles, LSH index
+    *  2. derive the repaired survivor set from the PINNED pre-delete
+    *     state minus the family — exact winners off `doc_meta`'s
+    *     fingerprints, near-dup drops off the `dup_pairs` rows touching
+    *     no family member — which RESURRECTS any document whose only
+    *     predecessors were family members (the d15 stale-verdict
+    *     repair, here for the shingle tier). No text is ever re-read:
+    *     the pair graph among exact survivors is already persisted in
+    *     full, and the predecessor rule does not cascade. The set is
+    *     exactly what step 3 leaves in those tables, so it is
+    *     truncated alongside the pre-delete snapshots, before any
+    *     rewrite starts;
+    *  3. remove the family from the dedup store (shingles, LSH index
     *     rows, every pair touching it — [[StoreRetention.deleteDocs]])
     *     and from `doc_meta`, rewriting only the partitions that hold
     *     family rows;
-    *  3. re-derive the survivor set from the REPAIRED state — exact
-    *     winners off `doc_meta`'s fingerprints, near-dup drops off the
-    *     remaining `dup_pairs` — which RESURRECTS any document whose
-    *     only predecessors were family members (the d15 stale-verdict
-    *     repair, here for the shingle tier). No text is ever re-read:
-    *     the pair graph among exact survivors is already persisted in
-    *     full, and the predecessor rule does not cascade;
-    *  4. re-pack from the earliest changed document onward: batches
-    *     wholly before `min(family)` keep their shard partials
-    *     bit-for-bit (every changed or resurrected doc id is >
-    *     some family id), later batches recompute against the offset
-    *     summed from the untouched partials — the honest takedown cost
-    *     (a mid-corpus deletion shifts every later training sequence).
+    *  4. concurrently with step 3, re-pack the repaired set from the
+    *     earliest changed document onward: batches wholly before
+    *     `min(family)` keep their shard partials bit-for-bit (every
+    *     changed or resurrected doc id is > some family id), later
+    *     batches recompute against the offset summed from the untouched
+    *     partials — the honest takedown cost (a mid-corpus deletion
+    *     shifts every later training sequence).
+    *
+    * Steps 3 and 4 overlap ([[graft.core.Par]]) because their read and write
+    * sets are disjoint: step 3 reads and rewrites `doc_shingles`,
+    * `minhash_buckets`, `dup_pairs` and `doc_meta`; step 4 reads only
+    * truncated frames (the family, the pre-delete packed set, the
+    * repaired set), `shards` and `pack_fences`, and writes only those
+    * two. Neither reads a table the other writes.
     *
     * Post-delete the manifest equals the one-shot pipeline over the
     * corpus minus the family (gate p10). Idempotent: replayed victims
@@ -435,60 +447,92 @@ object CorpusPipeline {
   def delete(spark: SparkSession, st: State, victims: DataFrame)
       : (Long, Seq[String], Seq[String]) = {
     val meta = spark.table(st.metaRel)
+    val family = takedownFamily(meta, victims)
+    // The family count and three read-only snapshots of the SAME
+    // pre-delete state, mutually independent — taken concurrently
+    // ([[graft.core.Par]]); truncation is eager, so all three snapshots are
+    // pinned before any table changes: per-batch stats (a batch whose
+    // only late doc WAS the victim still owns stale partial rows), the
+    // pre-delete packed set (to detect resurrections) and the repaired
+    // packed set. A replay (empty family) pays the snapshots and writes
+    // nothing.
+    var nFamily = 0L
+    var batchStats: Seq[(String, Int, Long)] = null
+    var survOld: DataFrame = null
+    var surv: DataFrame = null
+    val (metaLeft, pairsLeft) = withoutFamily(spark, st, meta, family)
+    graft.core.Par.run(
+      () => nFamily = family.count(),
+      () => batchStats = preDeleteBatchStats(spark, meta),
+      () => survOld = Checkpoints.truncate(packedSet(meta,
+        DedupStore.allPairs(spark, st.dedup))),
+      () => surv = Checkpoints.truncate(packedSet(metaLeft, pairsLeft)))
+    if (nFamily == 0) return (0L, Nil, Nil)
+    var repacked: (Seq[String], Seq[String]) = null
+    graft.core.Par.run(
+      () => deleteFamily(spark, st, family),
+      () => repacked = repackChanged(spark, st, batchStats, surv,
+        changedDocs(family, survOld, surv)))
+    (nFamily, repacked._1, repacked._2)
+  }
+
+  /** Victims expanded to their exact-content family: the `(doc_id,
+    * epoch)` rows of `doc_meta` sharing a victim's fingerprint.
+    * localCheckpoint, NOT a registry cache: the family frame derives
+    * from doc_meta, and the meta rewrite INVALIDATES any cache over it —
+    * a lazily re-evaluated family would recompute over the post-delete
+    * table and silently come up empty exactly when a later step
+    * consumes it (caught by p11 at sf0.1: the family's vectors stayed in
+    * the semantic store as predecessors and kept dropping the doc their
+    * takedown should have resurrected). */
+  private[operators] def takedownFamily(meta: DataFrame,
+      victims: DataFrame): DataFrame = {
     val vicFps = meta
       .join(victims.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("fingerprint")).distinct()
-    // localCheckpoint, NOT a registry cache: the family frame derives
-    // from doc_meta, and the meta rewrite below invalidates any cache
-    // over it — a lazily re-evaluated family would recompute against
-    // the half-rewritten table (the bug [[deleteFull]] hit at sf0.1).
-    val family = meta
-      .join(vicFps, Seq("fingerprint"), "left_semi")
-      .select(col("doc_id"), col("epoch")).transform(graft.core.Checkpoints.truncate)
-    val nFamily = family.count()
-    if (nFamily == 0) return (0L, Nil, Nil)
-    // Pre-delete snapshots the repack needs: per-batch stats (a batch
-    // whose only late doc WAS the victim still owns stale partial rows)
-    // and the pre-delete packed set (to detect resurrections). Both are
-    // read-only over the SAME pre-delete state and independent of each
-    // other — snapshot them concurrently (guide §2.6); the barrier
-    // before the rewrites below stays (truncation is eager, so both are
-    // pinned before any table changes).
-    var batchStats: Seq[(String, Int, Long)] = null
-    var survOld: DataFrame = null
-    graft.core.Par.run(
-      () => batchStats = preDeleteBatchStats(spark, meta),
-      () => survOld = packedSet(meta,
-        DedupStore.allPairs(spark, st.dedup))
-        .transform(graft.core.Checkpoints.truncate))
-    // Dedup-store and doc_meta deletes touch disjoint relations, and
-    // the victim frame (`family`) is checkpoint-pinned — run them
-    // concurrently (guide §2.6).
+    Checkpoints.truncate(meta.join(vicFps, Seq("fingerprint"), "left_semi")
+      .select(col("doc_id"), col("epoch")))
+  }
+
+  /** `doc_meta` and `dup_pairs` as [[deleteFamily]] will leave them: the
+    * pre-delete rows minus the family — meta by `doc_id`, pairs by
+    * `doc_a` and then by `doc_b` (two equi-anti joins, the same chain
+    * [[StoreRetention.deleteDocs]] rewrites the pair table with). Lazy
+    * over `meta`: the caller truncates whatever it derives from these
+    * before the rewrite starts. */
+  private[operators] def withoutFamily(spark: SparkSession, st: State,
+      meta: DataFrame, family: DataFrame): (DataFrame, DataFrame) = {
+    val fam = family.select(col("doc_id").as("__fam"))
+    val pairs = DedupStore.allPairs(spark, st.dedup)
+    val pairsA = pairs.join(fam, pairs("doc_a") === col("__fam"), "left_anti")
+    (meta.join(fam, meta("doc_id") === col("__fam"), "left_anti"),
+      pairsA.join(fam, pairsA("doc_b") === col("__fam"), "left_anti"))
+  }
+
+  /** Step 3 of [[delete]]: the family leaves the dedup store and
+    * `doc_meta`. Disjoint relations and a checkpoint-pinned victim frame,
+    * so the four partition rewrites run concurrently. */
+  private def deleteFamily(spark: SparkSession, st: State,
+      family: DataFrame): Unit =
     graft.core.Par.run(
       () => StoreRetention.deleteDocs(spark, st.dedup,
         family.select(col("doc_id"))),
       () => StoreRetention.deleteRows(spark, st.metaRel, family,
-        (t, v) => t("doc_id") === v("doc_id")))
-    // Survivor flags from the repaired state — fingerprints and the pair
-    // graph, never text. One column-pruned scan of each; truncated so the
-    // repack's collects and per-epoch pack plans stay flat.
-    val surv = Checkpoints.truncate(packedSet(spark.table(st.metaRel),
-      DedupStore.allPairs(spark, st.dedup)))
-    val (affected, emptied) = repackChanged(spark, st, batchStats, surv,
-      changedDocs(family, survOld, surv))
-    (nFamily, affected, emptied)
-  }
+        Seq((t, v) => t("doc_id") === v("doc_id"))))
 
-  /** The packed survivor set derivable from state alone: min-id winner
-    * per fingerprint, minus every `doc_b` of the persisted pair graph —
-    * `(doc_id, toks, batch_id, epoch)`. */
-  private[operators] def packedSet(meta: DataFrame, pairs: DataFrame): DataFrame = {
+  /** The near-dup (stage-3) survivor set derivable from state alone:
+    * min-id winner per fingerprint, minus every `doc_b` of the pair
+    * graph — `(doc_id, toks, batch_id, epoch)` plus any `extra` meta
+    * columns. The packed set of the five-stage pipeline. */
+  private[operators] def packedSet(meta: DataFrame, pairs: DataFrame,
+      extra: String*): DataFrame = {
     // Winner derivation runs over the FULL persisted meta table on the
     // takedown path — exactly where a mega-dup fingerprint would
     // serialize a per-fingerprint window in one sort task; use the
     // [[fingerprintWinners]] keeper instead.
     val kept = fingerprintWinners(meta, "doc_id")
-      .select(col("doc_id"), col("toks"), col("batch_id"), col("epoch"))
+      .select((Seq("doc_id", "toks", "batch_id", "epoch") ++ extra)
+        .map(col): _*)
     kept.join(pairs.select(col("doc_b")),
       kept("doc_id") === col("doc_b"), "left_anti")
   }
@@ -549,23 +593,28 @@ object CorpusPipeline {
   private def repackChanged(spark: SparkSession, st: State,
       batchStats: Seq[(String, Int, Long)], surv: DataFrame,
       changed: DataFrame): (Seq[String], Seq[String]) = {
-    val fences0 = (Map(0 -> 0L) ++ fenceRows(spark, st).toMap)
-    // One row per epoch — a bounded collect.
-    val minChanged = changed.groupBy(col("epoch"))
-      .agg(min(col("doc_id")).as("mn")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    // Four independent bounded reads (one row per fence, epoch or
+    // batch), run concurrently: the committed fences, the
+    // earliest changed doc per epoch, and committed shard totals and
+    // post-repair survivor totals per (epoch, batch) — the inputs of
+    // the fence-headroom walk below.
+    def tokensPerBatch(df: DataFrame, c: String): Map[(Int, String), Long] =
+      df.groupBy(col("epoch"), col("batch_id").cast("string").as("b"))
+        .agg(sum(col(c)).as("t")).collect()
+        .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
+    var fences0: Map[Int, Long] = null
+    var minChanged: Map[Int, Long] = null
+    var shardToks: Map[(Int, String), Long] = null
+    var survToks: Map[(Int, String), Long] = null
+    graft.core.Par.run(
+      () => fences0 = Map(0 -> 0L) ++ fenceRows(spark, st).toMap,
+      () => minChanged = changed.groupBy(col("epoch"))
+        .agg(min(col("doc_id")).as("mn")).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap,
+      () => shardToks = tokensPerBatch(spark.table(st.shardsRel),
+        "pack_tokens"),
+      () => survToks = tokensPerBatch(surv, "toks"))
     if (minChanged.isEmpty) return (Nil, Nil)
-    // Committed shard totals and post-repair survivor totals per
-    // (epoch, batch) — two bounded collects (one row per batch), the
-    // inputs of the fence-headroom walk below.
-    val shardToks: Map[(Int, String), Long] = spark.table(st.shardsRel)
-      .groupBy(col("epoch"), col("batch_id").cast("string").as("b"))
-      .agg(sum(col("pack_tokens")).as("t")).collect()
-      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
-    val survToks: Map[(Int, String), Long] = surv
-      .groupBy(col("epoch"), col("batch_id").cast("string").as("b"))
-      .agg(sum(col("toks")).as("t")).collect()
-      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
     val byEpoch: Map[Int, Seq[(String, Long)]] = batchStats
       .groupBy(_._2).view.mapValues(_.map(r => (r._1, r._3)).toSeq).toMap
     val maxEpoch = (fences0.keySet ++ byEpoch.keySet).max
@@ -633,15 +682,16 @@ object CorpusPipeline {
           col("first_doc"), col("last_doc"), col("batch_id"),
           lit(e).as("epoch"))
     }
-    // The overwrite replaces partitions whose offset scalars this plan
-    // already consumed; lineage is truncated to the affected batches'
-    // recomputed rows (bounded by the takedown's spread).
-    val partials = partialsByEpoch.reduce(_ unionAll _).transform(graft.core.Checkpoints.truncate)
-    val rewritten = partials.select(col("batch_id").cast("string"))
-      .distinct().collect().map(_.getString(0)).toSet
+    // An affected batch gets partial rows iff it still holds survivors
+    // (the survivor totals' keys). The write needs no truncation: its
+    // plan reads only truncated frames (`surv` and the pack
+    // assignment), never `shards`, and the offset scalars it embeds
+    // were collected above.
+    val rewritten = affectedByEpoch.flatMap { case (e, batches, _) =>
+      batches.filter(b => survToks.contains((e, b))) }.toSet
     if (rewritten.nonEmpty)
-      mat.materializeIncremental(spark, st.shardsRel, partials,
-        Seq("batch_id"))
+      mat.materializeIncremental(spark, st.shardsRel,
+        partialsByEpoch.reduce(_ unionAll _), Seq("batch_id"))
     val affected = affectedByEpoch.flatMap(_._2).sorted.toIndexedSeq
     val emptied = affected.filterNot(rewritten)
     emptied.foreach(p =>
@@ -941,6 +991,15 @@ object CorpusPipeline {
     *    quality survivor at append time — final facts against the fixed
     *    benchmark), so no text is ever re-read here either.
     *
+    * The overlap is [[delete]]'s, with the semantic repair added to the
+    * second branch: the repaired stage-3 set comes from the pinned
+    * pre-delete snapshot minus the family, so the store rewrites
+    * (`doc_shingles`, `minhash_buckets`, `dup_pairs`, `doc_meta`) run
+    * concurrently with the repair → stage-5 set → re-pack chain, which
+    * reads only truncated frames, the embedding input, `sem_codebook`,
+    * `sem_vectors`, `shards` and `pack_fences`, and writes only the last
+    * three. Neither branch reads a table the other writes.
+    *
     * Post-delete the whole seven-table state is indistinguishable from
     * a build over the corpus minus the family under the same frozen
     * codebook (gate p11). Idempotent. Caller passes the embedding
@@ -950,84 +1009,49 @@ object CorpusPipeline {
       emb: DataFrame, vecIdCol: String, vecCol: String)
       : (Long, Seq[String], Seq[String]) = {
     val meta = spark.table(st.base.metaRel)
-    val vicFps = meta
-      .join(victims.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("fingerprint")).distinct()
-    // localCheckpoint, NOT a registry cache: the family frame derives
-    // from doc_meta, and the meta rewrite below INVALIDATES any cache
-    // over it — a lazily re-evaluated family would recompute over the
-    // post-delete table and silently come up empty exactly when the
-    // semantic repair consumes it (caught by p11 at sf0.1: the family's
-    // vectors stayed in the store as predecessors and kept dropping the
-    // doc their takedown should have resurrected).
-    val family = meta
-      .join(vicFps, Seq("fingerprint"), "left_semi")
-      .select(col("doc_id"), col("epoch")).transform(graft.core.Checkpoints.truncate)
-    val nFamily = family.count()
-    if (nFamily == 0) return (0L, Nil, Nil)
-    // Pre-delete snapshots: per-batch stats and the PACKED set under
-    // the pre-delete verdicts (to compute the changed-document frame —
-    // in the full recipe changes are NOT monotone: a resurrected
-    // predecessor can DROP its semantic successors, so the symmetric
-    // difference, not just resurrections, scopes the re-pack). Both
-    // read-only over the same pre-delete state and mutually independent
-    // — concurrent (guide §2.6), with the eager truncation keeping the
-    // barrier before the rewrites below.
+    val family = takedownFamily(meta, victims)
+    // The family count and the pre-delete snapshots, concurrently as in
+    // [[delete]]: per-batch stats, the PACKED set under the pre-delete
+    // verdicts (to compute the changed-document frame — in the full
+    // recipe changes are NOT monotone: a resurrected predecessor can
+    // DROP its semantic successors, so the symmetric difference, not
+    // just resurrections, scopes the re-pack), and the repaired stage-3
+    // survivors with their persisted contaminated flags (fingerprints
+    // and the pair graph, never text).
+    var nFamily = 0L
     var batchStats: Seq[(String, Int, Long)] = null
     var survOld: DataFrame = null
+    var surv3: DataFrame = null
+    val (metaLeft, pairsLeft) = withoutFamily(spark, st.base, meta, family)
     graft.core.Par.run(
+      () => nFamily = family.count(),
       () => batchStats = preDeleteBatchStats(spark, meta),
-      () => survOld = packedFullSet(spark, st, meta)
-        .transform(graft.core.Checkpoints.truncate))
-    // Disjoint relations, checkpoint-pinned victim frame — concurrent
-    // (guide §2.6; same argument as [[delete]]).
+      () => survOld = Checkpoints.truncate(packedFullSet(spark, st, meta)),
+      () => surv3 = Checkpoints.truncate(
+        packedSet(metaLeft, pairsLeft, "contaminated")))
+    if (nFamily == 0) return (0L, Nil, Nil)
+    var repacked: (Seq[String], Seq[String]) = null
     graft.core.Par.run(
-      () => StoreRetention.deleteDocs(spark, st.base.dedup,
-        family.select(col("doc_id"))),
-      () => StoreRetention.deleteRows(spark, st.base.metaRel, family,
-        (t, v) => t("doc_id") === v("doc_id")))
-    // Repaired stage-3 survivors, from state alone (fingerprints, the
-    // pair graph, the persisted contaminated flags — never text). The
-    // keeper is a min-aggregate + semi-join back on doc_id, not a
-    // per-fingerprint window (the exactMarked scale rule: a mega-dup
-    // cluster must not land in one sort task); joining on the unique
-    // doc_id side-steps the NULL-fingerprint join-key hazard entirely.
-    val meta2 = spark.table(st.base.metaRel)
-    val keeper2 = meta2.groupBy(col("fingerprint"))
-      .agg(min(col("doc_id")).as("__keep_id"))
-      .select(col("__keep_id"))
-    val kept = meta2.join(keeper2,
-        meta2("doc_id") === col("__keep_id"), "left_semi")
-      .select(col("doc_id"), col("toks"), col("batch_id"), col("epoch"),
-        col("contaminated"))
-    val surv3 = Checkpoints.truncate(kept.join(
-      DedupStore.allPairs(spark, st.base.dedup).select(col("doc_b")),
-      kept("doc_id") === col("doc_b"), "left_anti"))
-    // Semantic repair: the family leaves; stage-3 resurrections that
-    // have embeddings re-enter their original batch partitions.
-    val storeVids = spark.table(st.sem.vectorsRel).select(col("vid"))
-    val resurrected = surv3.select(col("doc_id"), col("batch_id"))
-      .join(storeVids, col("doc_id") === col("vid"), "left_anti")
-    val insRows = emb.join(
-        resurrected.select(col("doc_id").as("__rid"), col("batch_id")),
-        emb(vecIdCol) === col("__rid"))
-      .drop("__rid")
-    val inserts = SemanticStore.assignedRows(spark, st.sem, insRows,
-      vecIdCol, vecCol)
-    SemanticStore.repair(spark, st.sem, family.select(col("doc_id")),
-      Some(inserts), "doc_id", "vid")
-    val semDropped = spark.table(st.sem.vectorsRel)
-      .filter(!col("keep")).select(col("vid"))
-    val surv5 = Checkpoints.truncate(surv3
-      .join(semDropped, surv3("doc_id") === col("vid"), "left_anti")
-      .filter(!col("contaminated"))
-      .select(col("doc_id"), col("toks"), col("batch_id"),
-        col("epoch")))
-    // Epoch-scoped re-pack (the [[repackChanged]] bound: epochs with no
-    // changed documents keep their shard partials byte-for-byte).
-    val (affected, emptied) = repackChanged(spark, st.base, batchStats,
-      surv5, changedDocs(family, survOld, surv5))
-    (nFamily, affected, emptied)
+      () => deleteFamily(spark, st.base, family),
+      () => {
+        // Semantic repair: the family leaves; stage-3 resurrections that
+        // have embeddings re-enter their original batch partitions.
+        val storeVids = spark.table(st.sem.vectorsRel).select(col("vid"))
+        val resurrected = surv3.select(col("doc_id"), col("batch_id"))
+          .join(storeVids, col("doc_id") === col("vid"), "left_anti")
+        val insRows = emb.join(
+            resurrected.select(col("doc_id").as("__rid"), col("batch_id")),
+            emb(vecIdCol) === col("__rid"))
+          .select(col(vecIdCol).as("vid"), col(vecCol).as("vec"),
+            col("batch_id"))
+        SemanticStore.repair(spark, st.sem, family, "doc_id", Some(insRows))
+        // Epoch-scoped re-pack (the [[repackChanged]] bound: epochs with
+        // no changed documents keep their shard partials byte-for-byte).
+        val surv5 = Checkpoints.truncate(cleanSet(spark, st, surv3))
+        repacked = repackChanged(spark, st.base, batchStats, surv5,
+          changedDocs(family, survOld, surv5))
+      })
+    (nFamily, repacked._1, repacked._2)
   }
 
   /** The FINAL packed set (all six stages) derivable from persisted
@@ -1037,18 +1061,19 @@ object CorpusPipeline {
     * store currently holds (callers snapshot it pre-repair via
     * localCheckpoint when they need the before-state). */
   private[operators] def packedFullSet(spark: SparkSession, st: FullState,
-      meta: DataFrame): DataFrame = {
-    // Same keeper shape as [[packedSet]]: the [[fingerprintWinners]]
-    // aggregate, never a per-fingerprint window over the full meta table.
-    val kept = fingerprintWinners(meta, "doc_id")
-      .select(col("doc_id"), col("toks"), col("batch_id"), col("epoch"),
-        col("contaminated"))
-    val s3 = kept.join(
-      DedupStore.allPairs(spark, st.base.dedup).select(col("doc_b")),
-      kept("doc_id") === col("doc_b"), "left_anti")
+      meta: DataFrame): DataFrame =
+    cleanSet(spark, st, packedSet(meta,
+      DedupStore.allPairs(spark, st.base.dedup), "contaminated"))
+
+  /** Stages 4–5 over persisted state: stage-3 rows (with their
+    * `contaminated` flag) minus the semantic store's current `keep =
+    * false` verdicts minus contaminated documents — `(doc_id, toks,
+    * batch_id, epoch)`. */
+  private def cleanSet(spark: SparkSession, st: FullState,
+      surv3: DataFrame): DataFrame = {
     val semDropped = spark.table(st.sem.vectorsRel)
       .filter(!col("keep")).select(col("vid"))
-    s3.join(semDropped, s3("doc_id") === col("vid"), "left_anti")
+    surv3.join(semDropped, surv3("doc_id") === col("vid"), "left_anti")
       .filter(!col("contaminated"))
       .select(col("doc_id"), col("toks"), col("batch_id"), col("epoch"))
   }

@@ -137,6 +137,26 @@ object LinkGraphStore {
     drop
   }
 
+  /** The retention half of every host takedown: `victims` (one `id`
+    * column) leave the edge table in BOTH directions — one rewrite whose
+    * two match conditions (`src`, `dst`) chain as equi-anti joins — and
+    * leave `vertexRel` (the analytic's per-host checkpoint table). The
+    * two relations are independent, so the rewrites run concurrently.
+    * One [[StoreRetention.DeleteStats]] per relation,
+    * edges first. */
+  private def deleteVictims(spark: SparkSession, store: LinkGraphStore,
+      vertexRel: String, victims: DataFrame)
+      : Seq[StoreRetention.DeleteStats] = {
+    val out = new Array[StoreRetention.DeleteStats](2)
+    graft.core.Par.run(
+      () => out(0) = StoreRetention.deleteRows(spark, store.edgesRel,
+        victims, Seq((t, v) => t("src") === v("id"),
+          (t, v) => t("dst") === v("id"))),
+      () => out(1) = StoreRetention.deleteRows(spark, vertexRel, victims,
+        Seq((t, v) => t("id") === v("id"))))
+    out.toIndexedSeq
+  }
+
   /** Host TAKEDOWN with rank repair: remove `victims` (one `id`
     * column) — their edges in BOTH directions and their rows in every
     * rank checkpoint leave partition-scoped ([[StoreRetention]]) —
@@ -157,22 +177,7 @@ object LinkGraphStore {
       victims: DataFrame, iters: Int, store: LinkGraphStore,
       batchId: String, fromBatch: String)
       : Seq[StoreRetention.DeleteStats] = {
-    // Two independent chains run concurrently (guide §2.6): the two
-    // edge-side passes stay SEQUENTIAL within their chain (the dst pass
-    // reads the table the src pass rewrote — interleaving would
-    // resurrect the first pass's deletes), while the ranks delete
-    // touches its own relation.
-    val out = new Array[Seq[StoreRetention.DeleteStats]](2)
-    graft.core.Par.run(
-      () => out(0) = Seq(
-        StoreRetention.deleteRows(spark, store.edgesRel, victims,
-          (t, v) => t("src") === v("id")),
-        StoreRetention.deleteRows(spark, store.edgesRel, victims,
-          (t, v) => t("dst") === v("id"))),
-      () => out(1) = Seq(
-        StoreRetention.deleteRows(spark, store.ranksRel, victims,
-          (t, v) => t("id") === v("id"))))
-    val stats = out.toIndexedSeq.flatten
+    val stats = deleteVictims(spark, store, store.ranksRel, victims)
     val start = spark.table(store.ranksRel)
       .filter(col("batch_id") === fromBatch)
       .select(col("id"), col("r"))
@@ -272,19 +277,7 @@ object LinkGraphStore {
     val victimLabels = spark.table(store.takedownsRel)
       .filter(col("batch_id") === batchId)
       .select(col("label")).distinct()
-    // Same two-chain overlap as [[deleteAndRank]] (edges sequential
-    // within their chain; the labels relation is independent).
-    val out = new Array[Seq[StoreRetention.DeleteStats]](2)
-    graft.core.Par.run(
-      () => out(0) = Seq(
-        StoreRetention.deleteRows(spark, store.edgesRel, victims,
-          (t, v) => t("src") === v("id")),
-        StoreRetention.deleteRows(spark, store.edgesRel, victims,
-          (t, v) => t("dst") === v("id"))),
-      () => out(1) = Seq(
-        StoreRetention.deleteRows(spark, store.labelsRel, victims,
-          (t, v) => t("id") === v("id"))))
-    val stats = out.toIndexedSeq.flatten
+    val stats = deleteVictims(spark, store, store.labelsRel, victims)
     // Survivors of the victim components (their label rows survived
     // the rewrite; the victims' own did not).
     val prior = spark.table(store.labelsRel)
@@ -364,19 +357,7 @@ object LinkGraphStore {
   def deleteAndPropagate(spark: SparkSession, victims: DataFrame,
       store: LinkGraphStore, batchId: String, fromBatch: String,
       iters: Int = 2): Seq[StoreRetention.DeleteStats] = {
-    // Same two-chain overlap as [[deleteAndRank]] (edges sequential
-    // within their chain; the communities relation is independent).
-    val out = new Array[Seq[StoreRetention.DeleteStats]](2)
-    graft.core.Par.run(
-      () => out(0) = Seq(
-        StoreRetention.deleteRows(spark, store.edgesRel, victims,
-          (t, v) => t("src") === v("id")),
-        StoreRetention.deleteRows(spark, store.edgesRel, victims,
-          (t, v) => t("dst") === v("id"))),
-      () => out(1) = Seq(
-        StoreRetention.deleteRows(spark, store.communitiesRel, victims,
-          (t, v) => t("id") === v("id"))))
-    val stats = out.toIndexedSeq.flatten
+    val stats = deleteVictims(spark, store, store.communitiesRel, victims)
     // localCheckpoint: the start slice lazily reads communitiesRel,
     // which writeCommunities below rewrites — an unpinned source plan
     // would race its own rewrite (the deleteFull lesson).

@@ -162,7 +162,9 @@ object SemanticStore {
     * longer exists — the stale-verdict bug. Deletion here is
     * cluster-scoped repair:
     *
-    *  1. find the affected CLUSTERS (≤ k ids — one bounded collect);
+    *  1. find the affected CLUSTERS and the batch partitions holding
+    *     them — one bounded collect of the store's (cluster, batch)
+    *     grid;
     *  2. re-run the predecessor pass over those clusters' SURVIVORS
     *     (vectors and norms stream off the store — nothing is
     *     re-embedded or re-assigned, the frozen codebook is untouched:
@@ -183,109 +185,130 @@ object SemanticStore {
     */
   def delete(spark: SparkSession, store: SemanticStore,
       victims: DataFrame): (Seq[String], Seq[String]) =
-    repair(spark, store, victims, None, "vec_id", "vec_id")
+    repair(spark, store, victims, "vec_id", None)
 
-  /** Generalized cluster-scoped REPAIR — the takedown verb plus its
-    * mirror image: `inserts` (optional `(idCol, cid?, …)` rows with
-    * `v`/`nrm`/`batch_id` pre-assigned by the caller against the frozen
-    * codebook) join the store MID-HISTORY. The composed pipeline needs
-    * this because a takedown can RESURRECT a document at an earlier
-    * dedup stage (its only near-dup predecessor was the victim), and
-    * that document's vector must then participate in the semantic
-    * stage as the predecessor it always would have been — so the
-    * predecessor pass re-runs over every cluster any removed OR
-    * inserted vector touches, and exactly those clusters' partitions
-    * rewrite. Unaffected clusters keep their stored verdicts (their
-    * membership did not change, so the verdicts are still the one-shot
-    * answer). Inserted rows commit into their ORIGINAL batch partition
-    * (they carry `batch_id`) — post-repair the store is
-    * indistinguishable from one that ingested the repaired survivor
-    * set from the start. */
+  /** Generalized cluster-scoped REPAIR — the takedown verb plus its mirror
+    * image: `inserts` (optional `(vid, vec, batch_id)` rows) join the store
+    * MID-HISTORY, assigned here against the frozen codebook. The composed
+    * pipeline needs this because a takedown can RESURRECT a document at an
+    * earlier dedup stage (its only near-dup predecessor was the victim),
+    * and that document's vector must then participate in the semantic stage
+    * as the predecessor it always would have been — so the predecessor pass
+    * re-runs over every cluster any removed OR inserted vector touches, and
+    * exactly those clusters' partitions rewrite. Unaffected clusters keep
+    * their stored verdicts (their membership did not change, so the
+    * verdicts are still the one-shot answer). Inserted rows commit into
+    * their ORIGINAL batch partition — post-repair the store is
+    * indistinguishable from one that ingested the repaired survivor set
+    * from the start.
+    *
+    * Executions: the codebook read (centroids and tau together), at
+    * most two planning collects — the inserts' (cluster, batch) cells
+    * and the store's (cluster, batch) grid with per-cell row and victim
+    * counts; the grid overlaps the other two — then the truncated
+    * rewrite and its write. The affected clusters, the rewritten
+    * partitions and the emptied ones all derive from the two collects;
+    * nothing is collected off the rewrite. */
   private[operators] def repair(spark: SparkSession, store: SemanticStore,
-      victims: DataFrame, inserts: Option[DataFrame], idCol: String,
-      insIdCol: String): (Seq[String], Seq[String]) = {
-    val threshold = storedTau(spark, store)
+      victims: DataFrame, idCol: String,
+      inserts: Option[DataFrame]): (Seq[String], Seq[String]) = {
     val t = spark.table(store.vectorsRel)
     val vic = victims.select(col(idCol).as("vid"))
-    val ins = inserts.map(df => Caches.persist(
-      df.select(col(insIdCol).as("vid"), col("cid"), col("v"),
-        col("nrm"), col("batch_id"))))
-    val insCids = ins.map(_.select(col("cid")).distinct()
-        .collect().map(_.getInt(0)).toSeq).getOrElse(Nil)
-    val cids = (t.join(vic, "vid").select(col("cid")).distinct()
-      .collect().map(_.getInt(0)).toSeq ++ insCids)
+    // The codebook read plus the insert-cell collect (the inserts are
+    // assigned against that codebook) overlap the store-grid collect —
+    // independent reads.
+    var codebook: (Array[(Array[Double], Double)], Double) = null
+    var ins: Option[DataFrame] = None
+    var insCells: Seq[(Int, String)] = Nil
+    var grid: Seq[(Int, String, Long, Long)] = null
+    graft.core.Par.run(
+      () => {
+        codebook = loadCodebook(spark, store)
+        // Row-local assignment (inline-literal centroids), persisted:
+        // the cell collect and the rewrite both consume it.
+        ins = inserts.map(rows => Caches.persist(Similarity.assignClusters(
+            Similarity.normalized(rows, "vid", "vec", "batch_id"),
+            codebook._1)
+          .select(col("vid"), col("cid"), col("v"), col("nrm"),
+            col("batch_id").cast("string").as("batch_id"))))
+        insCells = ins.map(_.select(col("cid"), col("batch_id")).distinct()
+          .collect().map(r => (r.getInt(0), r.getString(1))).toSeq)
+          .getOrElse(Nil)
+      },
+      () => {
+        // (cid, batch, rows, victims) per cell: one row per (cluster,
+        // batch) pair, at most k times the batch count. Exact counts from
+        // a union of the store and its victim rows (a semi-join, so a
+        // duplicated victim id counts once).
+        val part = col("batch_id").cast("string").as("p")
+        grid = t.select(col("cid"), part, lit(1L).as("n"), lit(0L).as("g"))
+          .unionAll(t.join(vic, Seq("vid"), "left_semi")
+            .select(col("cid"), part, lit(0L).as("n"), lit(1L).as("g")))
+          .groupBy(col("cid"), col("p"))
+          .agg(sum(col("n")).as("n"), sum(col("g")).as("g"))
+          .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2),
+            r.getLong(3))).toSeq
+      })
+    val threshold = codebook._2
+    val cids = (grid.filter(_._4 > 0).map(_._1) ++ insCells.map(_._1))
       .distinct.sorted.toIndexedSeq
     if (cids.isEmpty) return (Nil, Nil)
-    val scoped = t.filter(col("cid").isin(cids: _*))
-    val insParts = ins.map(_.select(col("batch_id").cast("string"))
-      .distinct().collect().map(_.getString(0)).toSeq).getOrElse(Nil)
-    val parts = (scoped.select(col("batch_id").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq ++ insParts)
+    val cidSet = cids.toSet
+    val insParts = insCells.map(_._2).toSet
+    val parts = (grid.filter(c => cidSet(c._1)).map(_._2) ++ insParts)
       .distinct.sorted.toIndexedSeq
-    val kept0 = scoped.join(vic, Seq("vid"), "left_anti")
-      .select(col("cid"), col("vid"), col("v"), col("nrm"),
-        col("batch_id").cast("string").as("batch_id"))
-    val surv = Caches.persist(ins match {
-      case Some(i) => kept0.union(i.select(col("cid"), col("vid"),
-        col("v"), col("nrm"), col("batch_id").cast("string")))
-      case None => kept0
-    })
-    val pred = surv.select(col("cid"), col("vid").as("pvid"),
-      col("v").as("pv"), col("nrm").as("pn"))
-    val dropped = surv.join(pred, "cid")
-      .filter(col("pvid") < col("vid") &&
-        Similarity.sim(col("pv"), col("pn"), col("v"), col("nrm"))
-          >= threshold)
-      .select(col("vid")).distinct()
-      .withColumn("__dropped", lit(true))
-    val repaired = surv.join(dropped, Seq("vid"), "left")
-      .select(col("cid"), col("vid"), col("v"), col("nrm"),
-        col("__dropped").isNull.as("keep"), col("batch_id"))
-    val untouched = t.filter(col("batch_id").isin(parts: _*) &&
-        !col("cid").isin(cids: _*))
-      .select(col("cid"), col("vid"), col("v"), col("nrm"), col("keep"),
-        col("batch_id"))
-    // The overwrite replaces partitions this plan reads — truncate
-    // lineage first (bounded by the affected clusters' spread).
-    val rewrite = repaired.union(untouched).transform(graft.core.Checkpoints.truncate)
-    val kept = rewrite.select(col("batch_id").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (kept.nonEmpty)
-      mat.materializeIncremental(spark, store.vectorsRel, rewrite,
+    // A partition empties iff every row it holds is a victim and no
+    // insert lands in it.
+    val remaining = grid.groupMapReduce(_._2)(c => c._3 - c._4)(_ + _)
+    val emptied = parts.filter(p =>
+      !insParts(p) && remaining.getOrElse(p, 0L) == 0L)
+    if (emptied.size < parts.size) {
+      val kept0 = t.filter(col("cid").isin(cids: _*))
+        .join(vic, Seq("vid"), "left_anti")
+        .select(col("cid"), col("vid"), col("v"), col("nrm"),
+          col("batch_id").cast("string").as("batch_id"))
+      val surv = Caches.persist(ins match {
+        case Some(i) => kept0.union(i.select(col("cid"), col("vid"),
+          col("v"), col("nrm"), col("batch_id")))
+        case None => kept0
+      })
+      val pred = surv.select(col("cid"), col("vid").as("pvid"),
+        col("v").as("pv"), col("nrm").as("pn"))
+      val dropped = surv.join(pred, "cid")
+        .filter(col("pvid") < col("vid") &&
+          Similarity.sim(col("pv"), col("pn"), col("v"), col("nrm"))
+            >= threshold)
+        .select(col("vid")).distinct()
+        .withColumn("__dropped", lit(true))
+      val repaired = surv.join(dropped, Seq("vid"), "left")
+        .select(col("cid"), col("vid"), col("v"), col("nrm"),
+          col("__dropped").isNull.as("keep"), col("batch_id"))
+      val untouched = t.filter(col("batch_id").isin(parts: _*) &&
+          !col("cid").isin(cids: _*))
+        .select(col("cid"), col("vid"), col("v"), col("nrm"), col("keep"),
+          col("batch_id"))
+      // The overwrite replaces partitions this plan reads — truncate
+      // lineage first (bounded by the affected clusters' spread).
+      mat.materializeIncremental(spark, store.vectorsRel,
+        repaired.union(untouched).transform(graft.core.Checkpoints.truncate),
         Seq("batch_id"))
-    val emptied = parts.filterNot(kept)
+    }
     emptied.foreach(p =>
       mat.dropPartition(spark, store.vectorsRel, "batch_id", p))
     (parts, emptied)
   }
 
-  /** The store's persisted similarity threshold (one value, set at
-    * build). */
-  def storedTau(spark: SparkSession, store: SemanticStore): Double =
-    spark.table(store.codebookRel).select(col("tau")).head().getDouble(0)
-
-  /** Rows assigned against the FROZEN codebook for a [[repair]] insert:
-    * `(vid, cid, v, nrm, batch_id)` from `(idCol, vecCol, batch_id)`
-    * input. Row-local (inline-literal centroids) plus one id equi-join
-    * to re-attach the batch tag the normalization projection drops. */
-  private[operators] def assignedRows(spark: SparkSession,
-      store: SemanticStore, rows: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
-    val cb = loadCodebook(spark, store)
-    Similarity.assignClusters(
-        Similarity.normalized(rows, idCol, vecCol), cb)
-      .select(col("vid"), col("cid"), col("v"), col("nrm"))
-      .join(rows.select(col(idCol).as("vid"), col("batch_id")), "vid")
-  }
-
-  /** The frozen codebook in cid order — k rows, the one bounded collect
-    * an ingest needs (centroids ride inline in the assignment
-    * expression). */
+  /** The frozen codebook in cid order plus the store's persisted
+    * similarity threshold — k rows, the one bounded collect an ingest or
+    * a repair needs (centroids ride inline in the assignment
+    * expression; tau rides in every codebook row, set at build). */
   private def loadCodebook(spark: SparkSession, store: SemanticStore)
-      : Array[(Array[Double], Double)] =
-    spark.table(store.codebookRel).orderBy(col("cid"))
-      .select(col("cv"), col("cn")).collect()
-      .map(r => (r.getSeq[Double](0).toArray, r.getDouble(1)))
+      : (Array[(Array[Double], Double)], Double) = {
+    val rows = spark.table(store.codebookRel).orderBy(col("cid"))
+      .select(col("cv"), col("cn"), col("tau")).collect()
+    (rows.map(r => (r.getSeq[Double](0).toArray, r.getDouble(1))),
+      rows.head.getDouble(2))
+  }
 
   private def ingest(spark: SparkSession, batch: DataFrame, idCol: String,
       vecCol: String, store: SemanticStore,
@@ -306,8 +329,7 @@ object SemanticStore {
       idCol: String, vecCol: String,
       store: SemanticStore, batchId: String, firstBatch: Boolean)
       : DataFrame = {
-    val threshold = storedTau(spark, store)
-    val cb = loadCodebook(spark, store)
+    val (cb, threshold) = loadCodebook(spark, store)
     val assigned = Caches.persist(Similarity.assignClusters(
         Similarity.normalized(batch, idCol, vecCol), cb)
       .select(col("vid"), col("cid"), col("v"), col("nrm")))

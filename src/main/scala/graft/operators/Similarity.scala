@@ -33,9 +33,10 @@ object Similarity {
       (sqrt(Hashing.dotProduct(a, a)) * sqrt(Hashing.dotProduct(b, b)))
 
   /** (vid, v, nrm) with the L2 norm materialized once per vector. */
-  private[operators] def normalized(emb: DataFrame, idCol: String, vecCol: String) = {
+  private[operators] def normalized(emb: DataFrame, idCol: String,
+      vecCol: String, keep: String*) = {
     val v = col(vecCol).cast("array<double>")
-    emb.select(col(idCol).as("vid"), v.as("v"))
+    emb.select(Seq(col(idCol).as("vid"), v.as("v")) ++ keep.map(col): _*)
       .withColumn("nrm", sqrt(Hashing.dotProduct(col("v"), col("v"))))
   }
 

@@ -104,7 +104,7 @@ object SpanStore {
   def delete(spark: SparkSession, store: SpanStore,
       ids: DataFrame): StoreRetention.DeleteStats =
     StoreRetention.deleteRows(spark, store.gramsRel, ids,
-      (t, v) => t("doc_id") === v("doc_id"))
+      Seq((t, v) => t("doc_id") === v("doc_id")))
 
   /** The store as the source of truth: rewrite `docs` (which must be
     * exactly the corpus the store currently indexes — the survivors,

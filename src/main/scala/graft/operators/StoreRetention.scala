@@ -12,22 +12,33 @@ import graft.model.CatalogMaterializer
   * victims re-pays the full pass, and filtering victims at read time
   * leaves the data on disk (not deletion at all, and a per-probe tax
   * forever). Here a delete rewrites ONLY the batch partitions that
-  * contain victim rows:
+  * contain victim rows, in at most three SQL executions:
   *
-  *  1. locate affected partitions (semi-join the store with the victim
-  *     ids — the scan prunes row groups via parquet min/max stats when
-  *     ids cluster, and nothing else is read twice);
-  *  2. rewrite those partitions minus the victims in one dynamic
-  *     partition overwrite (job-atomic per commit);
-  *  3. DROP any partition the delete emptied — the empty-increment
-  *     contract: dynamic overwrite with an empty frame touches nothing,
-  *     which would silently RETAIN the victim rows.
+  *  1. AGGREGATE — one collect of per-partition `(total, remaining)`
+  *     counts, `remaining` counted over the store minus the victims. A
+  *     partition is affected iff the two differ and emptied iff nothing
+  *     remains; the deleted-row count is the summed difference. Exact,
+  *     and the only read that plans over the whole store;
+  *  2. TRUNCATE — the remaining rows of the affected partitions that
+  *     keep rows, lineage-truncated (the overwrite replaces partitions
+  *     this plan reads; bounded by the victim set's spread, not the
+  *     store);
+  *  3. WRITE — those partitions in one dynamic partition overwrite
+  *     (job-atomic per commit). A partition the delete emptied is
+  *     DROPPED instead — the empty-increment contract: dynamic overwrite
+  *     with an empty frame touches nothing, which would silently RETAIN
+  *     the victim rows. When every affected partition empties, steps 2
+  *     and 3 are skipped and only the drops run.
   *
   * Victims arrive as a DataFrame of ids (takedown lists run to millions
-  * — a join, never an `isin` literal), joined by a caller-supplied
-  * condition so multi-column stores can match on any side. Deleting is
-  * idempotent: re-running the same victim set finds no affected
-  * partitions and touches nothing.
+  * — a join, never an `isin` literal), matched by one or more
+  * caller-supplied conditions: a row goes when ANY of them matches, so
+  * multi-column stores (pair tables, edge tables) delete both sides in
+  * one rewrite. The conditions chain as equi-anti joins, one per
+  * condition — never one OR-join, which would fall off the hash-join
+  * path — and a row matching several of them is deleted and counted
+  * once. Deleting is idempotent: re-running the same victim set finds
+  * no affected partitions, runs the aggregate alone and touches nothing.
   */
 object StoreRetention {
 
@@ -38,60 +49,61 @@ object StoreRetention {
         s"(${dropped.size} emptied)"
   }
 
+  /** One match condition: `m(store, ids)` builds the join predicate from
+    * the two sides' columns. */
+  type Match = (DataFrame, DataFrame) => Column
+
   private def mat = new CatalogMaterializer
 
-  /** Delete every row of `relation` matching `ids` under `cond`
-    * (`cond(store, ids)` builds the join predicate from the two sides'
-    * columns). Rewrites only the partitions containing matches. */
+  /** Delete every row of `relation` that ANY of `matches` pairs with a
+    * row of `ids`. Rewrites only the partitions containing matches. */
   def deleteRows(spark: SparkSession, relation: String, ids: DataFrame,
-      cond: (DataFrame, DataFrame) => Column,
-      partCol: String = "batch_id"): DeleteStats = {
+      matches: Seq[Match], partCol: String = "batch_id"): DeleteStats = {
+    require(matches.nonEmpty, s"deleteRows($relation) needs a match condition")
     val t = spark.table(relation)
-    val affected = t.join(ids, cond(t, ids), "left_semi")
-      .select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).sorted.toIndexedSeq
-    if (affected.isEmpty)
+    def remaining(df: DataFrame): DataFrame =
+      matches.foldLeft(df)((d, m) => d.join(ids, m(d, ids), "left_anti"))
+    val part = col(partCol).cast("string").as("p")
+    val counts = t.select(part, lit(1L).as("n"), lit(0L).as("r"))
+      .unionAll(remaining(t).select(part, lit(0L).as("n"), lit(1L).as("r")))
+      .groupBy(col("p"))
+      .agg(sum(col("n")).as("n"), sum(col("r")).as("r"))
+      .filter(col("n") =!= col("r"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1).toIndexedSeq
+    if (counts.isEmpty)
       return DeleteStats(relation, Nil, Nil, 0L)
-    val scoped = t.filter(col(partCol).isin(affected: _*))
-    val before = scoped.count()
-    // The overwrite replaces partitions the remaining-rows plan reads;
-    // truncate lineage first (affected partitions only — bounded by the
-    // victim set's spread, not the store).
-    val remaining = scoped.join(ids, cond(scoped, ids), "left_anti")
-      .transform(graft.core.Checkpoints.truncate)
-    val kept = remaining.select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
+    val (kept, emptied) = counts.partition(_._3 > 0)
     if (kept.nonEmpty)
-      mat.materializeIncremental(spark, relation, remaining, Seq(partCol))
-    val dropped = affected.filterNot(kept)
+      mat.materializeIncremental(spark, relation,
+        remaining(t.filter(col(partCol).isin(kept.map(_._1): _*)))
+          .transform(graft.core.Checkpoints.truncate),
+        Seq(partCol))
+    val dropped = emptied.map(_._1)
     dropped.foreach(p => mat.dropPartition(spark, relation, partCol, p))
-    DeleteStats(relation, affected, dropped, before - remaining.count())
+    DeleteStats(relation, counts.map(_._1), dropped,
+      counts.map(c => c._2 - c._3).sum)
   }
 
   /** Remove documents from a [[DedupStore]]: their shingles, their LSH
-    * index rows, and every verified pair touching them (both sides —
-    * two equi-anti passes, not one OR-join that would fall off the
-    * hash-join path). `ids` carries one `doc_id` column. */
+    * index rows, and every verified pair touching them (either side —
+    * one rewrite with two match conditions). `ids` carries one `doc_id`
+    * column. The three relations are independent, so their rewrites run
+    * concurrently; one [[DeleteStats]] per relation. */
   def deleteDocs(spark: SparkSession, store: DedupStore,
       ids: DataFrame): Seq[DeleteStats] = {
-    def byDoc(rel: String) = deleteRows(spark, rel, ids,
-      (t, v) => t("doc_id") === v("doc_id"))
-    // Three independent chains run concurrently (guide §2.6): the
-    // shingle and index deletes touch their own relations, and the two
-    // pair-side passes stay SEQUENTIAL within their chain — the doc_b
-    // pass reads the table the doc_a pass rewrote; interleaving them
-    // would recompute both `remaining` sets from the pre-delete table
-    // and the second commit would resurrect the first pass's deletes.
-    val out = new Array[Seq[DeleteStats]](3)
-    graft.core.Par.run(
-      () => out(0) = Seq(byDoc(store.shinglesRel)),
-      () => out(1) = Seq(byDoc(store.bucketsRel)),
-      () => out(2) = Seq(
-        deleteRows(spark, store.pairsRel, ids,
-          (t, v) => t("doc_a") === v("doc_id")),
-        deleteRows(spark, store.pairsRel, ids,
-          (t, v) => t("doc_b") === v("doc_id"))))
-    out.toIndexedSeq.flatten
+    val byDoc: Seq[Match] = Seq((t, v) => t("doc_id") === v("doc_id"))
+    val rewrites: Seq[(String, Seq[Match])] = Seq(
+      store.shinglesRel -> byDoc,
+      store.bucketsRel -> byDoc,
+      store.pairsRel -> Seq(
+        (t, v) => t("doc_a") === v("doc_id"),
+        (t, v) => t("doc_b") === v("doc_id")))
+    val out = new Array[DeleteStats](rewrites.size)
+    graft.core.Par.run(rewrites.zipWithIndex.map { case ((rel, ms), i) =>
+      () => out(i) = deleteRows(spark, rel, ids, ms)
+    }: _*)
+    out.toIndexedSeq
   }
 
   /** Remove documents from a [[PostingsStore]]: their postings and
@@ -108,7 +120,7 @@ object StoreRetention {
     graft.core.Par.run(
       Seq(store.postingsRel, store.lengthsRel).zipWithIndex.map {
         case (rel, i) => () => out(i) = deleteRows(spark, rel, ids,
-          (t, v) => t("doc_id") === v("doc_id"))
+          Seq((t, v) => t("doc_id") === v("doc_id")))
       }: _*)
     out.toIndexedSeq
   }
@@ -122,5 +134,5 @@ object StoreRetention {
   def deleteVectors(spark: SparkSession, index: VectorIndex,
       ids: DataFrame): DeleteStats =
     deleteRows(spark, index.codesRel, ids,
-      (t, v) => t("vid") === v("vec_id"))
+      Seq((t, v) => t("vid") === v("vec_id")))
 }

@@ -83,6 +83,52 @@ object EventsStream {
     layout.normalize(reader.parquet(dir))
   }
 
+  /** Scale-adaptive shuffle/state partition count for a stream over a
+    * staged feed ("size partitions to the data"): stateful
+    * streaming disables AQE, so nothing coalesces post-shuffle
+    * partitions at runtime, and the state-store partition count is
+    * FIXED at checkpoint creation from `spark.sql.shuffle.partitions` —
+    * whatever the session default is. That default is sized for the
+    * whole batch inventory, so a small feed pays (default × state
+    * stores per operator) file-backed store opens/commits PER TRIGGER
+    * of pure fixed cost (measured: st05's two micro-batches each ran 32
+    * near-empty tasks for ~2–2.6 s; the 8-core probe, whose r17 binary
+    * tied state partitions to the core count, reproduced r16-level
+    * times — the regression was exactly this fixed cost). Deriving the
+    * count from feed bytes / AQE's advisory partition size is the same
+    * sizing AQE would pick for the equivalent batch exchange: a tiny
+    * feed runs 1 partition, a 100 TB log fans out to
+    * bytes/advisory-size partitions with NO upper cap — nothing here is
+    * tuned to the local core count. `SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`
+    * pins it explicitly on clusters (e.g. to match a Kafka topic's
+    * partitioning). Restored after the query completes so batch gates
+    * keep the session default.
+    *
+    * The count is fixed when a query STARTS (the stream clones the
+    * session conf then), so `body` must start the stream — every
+    * stateful writer here ([[hourlyAgg]]/[[hourlyMart]],
+    * [[latestStateUpsert]], [[sessionize]], [[deduped]],
+    * [[viewClickJoin]]) is started inside it; once started, the query
+    * keeps its count after the restore. */
+  def feedSized[T](spark: SparkSession, feedDir: String)
+      (body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    val n = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
+      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
+      .getOrElse {
+        val p = new org.apache.hadoop.fs.Path(feedDir)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val bytes = fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
+        val advisory = spark.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf
+            .ADVISORY_PARTITION_SIZE_IN_BYTES)
+        math.max(1L, (bytes + advisory - 1) / advisory).toInt
+      }
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prior)
+  }
+
   /** Tumbling 1-hour windows per event type; the 2-hour watermark bounds
     * state while absorbing late files. */
   def hourlyAgg(events: DataFrame): DataFrame =
@@ -130,6 +176,10 @@ object EventsStream {
     * two days per trigger, so the rewrite amplification of the coarser
     * partition is bounded by one day of aggregate rows — 24 rows per
     * event type, noise next to the metadata saved.
+    *
+    * Start it inside [[feedSized]]: the update-mode aggregation's state
+    * partitions, and every merge shuffle of the micro-batches (streaming
+    * runs them with AQE off), take the count it sizes from the feed.
     */
   def hourlyMart(events: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
@@ -207,6 +257,9 @@ object EventsStream {
     * same read-merge-replace the engine's key-merge incremental uses.
     * State table size is |keys|, never |events| — the property that
     * keeps the sink bounded on an infinite log.
+    *
+    * Start it inside [[feedSized]]: each merge's ranking shuffle runs in
+    * the stream's session (AQE off) at the count it sizes from the feed.
     */
   def latestStateUpsert(events: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
@@ -280,6 +333,21 @@ object EventsStream {
           .as("lag_us"))
   }
 
+  /** Key the events frame for the custom-state sessionizers: (user_id,
+    * micros, exact ×10⁴-scaled value — see [[Session]] for why integer). */
+  private def keyedForSessions(events: DataFrame)
+      : org.apache.spark.sql.KeyValueGroupedDataset[
+          Long, org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.{Encoders, Row}
+    events
+      .withWatermark("ts", "2 hours")
+      .select(col("user_id"), unix_micros(col("ts")).as("us"),
+        (col("value").cast("decimal(18,4)") * lit(10000)).cast("long")
+          .as("v_s4"),
+        col("ts"))
+      .groupByKey((r: Row) => r.getLong(0))(Encoders.scalaLong)
+  }
+
   /** Custom-state sessionization via `flatMapGroupsWithState`: per user,
     * coalesce events into sessions closed by a 30-minute inactivity gap.
     *
@@ -298,23 +366,9 @@ object EventsStream {
     * State per user is the handful of sessions inside the watermark
     * horizon (bounded by watermark delay / gap, not by history), expired
     * via `GroupStateTimeout.EventTimeTimeout`; the timeout path flushes
-    * sessions for users that simply stop sending.
+    * sessions for users that simply stop sending. Start its query inside
+    * [[feedSized]] so the state-store count follows the feed.
     */
-  /** Key the events frame for the custom-state sessionizers: (user_id,
-    * micros, exact ×10⁴-scaled value — see [[Session]] for why integer). */
-  private def keyedForSessions(events: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[
-          Long, org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.{Encoders, Row}
-    events
-      .withWatermark("ts", "2 hours")
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        (col("value").cast("decimal(18,4)") * lit(10000)).cast("long")
-          .as("v_s4"),
-        col("ts"))
-      .groupByKey((r: Row) => r.getLong(0))(Encoders.scalaLong)
-  }
-
   def sessionize(events: DataFrame, gapMinutes: Int = 30)
       : org.apache.spark.sql.Dataset[Session] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}

@@ -40,45 +40,6 @@ final case class EdgeRow(src: Long, dst: Long)
   */
 object StreamingQueries extends QueryPack {
 
-  /** Scale-adaptive shuffle/state partition count for a stream over a
-    * staged feed (guide §2.2 "size partitions to the data"): stateful
-    * streaming disables AQE, so nothing coalesces post-shuffle
-    * partitions at runtime, and the state-store partition count is
-    * FIXED at checkpoint creation from `spark.sql.shuffle.partitions` —
-    * whatever the session default is. That default is sized for the
-    * whole batch inventory, so a small feed pays (default × state
-    * stores per operator) file-backed store opens/commits PER TRIGGER
-    * of pure fixed cost (measured: st05's two micro-batches each ran 32
-    * near-empty tasks for ~2–2.6 s; the 8-core probe, whose r17 binary
-    * tied state partitions to the core count, reproduced r16-level
-    * times — the regression was exactly this fixed cost). Deriving the
-    * count from feed bytes / AQE's advisory partition size is the same
-    * sizing AQE would pick for the equivalent batch exchange: a tiny
-    * feed runs 1 partition, a 100 TB log fans out to
-    * bytes/advisory-size partitions with NO upper cap — nothing here is
-    * tuned to the local core count. `SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`
-    * pins it explicitly on clusters (e.g. to match a Kafka topic's
-    * partitioning). Restored after the query completes so batch gates
-    * keep the session default. */
-  private def feedSizedPartitions[T](spark: SparkSession, feedDir: String)
-      (body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    val n = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse {
-        val p = new org.apache.hadoop.fs.Path(feedDir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bytes = fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-        val advisory = spark.sessionState.conf.getConf(
-          org.apache.spark.sql.internal.SQLConf
-            .ADVISORY_PARTITION_SIZE_IN_BYTES)
-        math.max(1L, (bytes + advisory - 1) / advisory).toInt
-      }
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prior)
-  }
-
   private def runToCompletion(out: DataFrame, name: String,
       mode: String): DataFrame = {
     val spark = out.sparkSession
@@ -129,7 +90,7 @@ object StreamingQueries extends QueryPack {
         val feedDir = stageFeed(dir, "graft_st01_feed")
         val agg = EventsStream.hourlyAgg(
           EventsStream.read(s, feedDir))
-        feedSizedPartitions(s, feedDir) {
+        EventsStream.feedSized(s, feedDir) {
           runToCompletion(agg, "st01_stream_hourly_sink", "complete")
         }
           .select(col("hour"), col("event_type"), col("n_events"),
@@ -152,7 +113,7 @@ object StreamingQueries extends QueryPack {
         val replayDir = stageFeed(dir, "graft_st02_feed", copies = 2)
         val deduped = EventsStream.deduped(
           EventsStream.read(s, replayDir))
-        feedSizedPartitions(s, replayDir) {
+        EventsStream.feedSized(s, replayDir) {
           runToCompletion(deduped, "st02_stream_dedup_sink", "append")
         }
           .select(col("event_id"), col("user_id"), col("event_type"),
@@ -173,7 +134,7 @@ object StreamingQueries extends QueryPack {
         val feedDir = stageFeed(dir, "graft_st04_feed")
         val mart = Files.createTempDirectory("graft_st04_mart")
           .resolve("hourly").toString
-        feedSizedPartitions(s, feedDir) {
+        EventsStream.feedSized(s, feedDir) {
           val q = EventsStream
             .hourlyMart(EventsStream.read(s, feedDir), mart)
             .option("checkpointLocation",
@@ -204,7 +165,7 @@ object StreamingQueries extends QueryPack {
         val feedDir = stageFeed(dir, "graft_st05_feed")
         val joined = EventsStream.viewClickJoin(
           EventsStream.read(s, feedDir))
-        feedSizedPartitions(s, feedDir) {
+        EventsStream.feedSized(s, feedDir) {
           runToCompletion(joined, "st05_stream_join_sink", "append")
         }
           .orderBy(col("user_id"), col("view_id"), col("click_id"))
@@ -247,7 +208,7 @@ object StreamingQueries extends QueryPack {
           .coalesce(1).write.mode("append").parquet(feedDir)
         val statePath = Files.createTempDirectory("graft_st07_state")
           .resolve("state").toString
-        feedSizedPartitions(s, feedDir) {
+        EventsStream.feedSized(s, feedDir) {
           val q = EventsStream.latestStateUpsert(
               EventsStream.read(s, feedDir, maxFilesPerTrigger = Some(1)),
               statePath)
@@ -310,7 +271,7 @@ object StreamingQueries extends QueryPack {
           .write.mode("append").parquet(feedDir.toString)
         val sessions = EventsStream.sessionize(
           EventsStream.read(s, feedDir)).toDF()
-        feedSizedPartitions(s, feedDir) {
+        EventsStream.feedSized(s, feedDir) {
           runToCompletion(sessions, "st03_stream_sessionize_sink", "append")
         }
           .filter(col("user_id") >= 0)
@@ -363,7 +324,7 @@ object StreamingQueries extends QueryPack {
         try {
           val sessions = EventsStream.sessionizeTws(
             EventsStream.read(s, feedDir)).toDF()
-          feedSizedPartitions(s, feedDir) {
+          EventsStream.feedSized(s, feedDir) {
             runToCompletion(sessions, "st09_sessionize_tws_sink", "append")
           }
             .filter(col("user_id") >= 0)
@@ -413,7 +374,7 @@ object StreamingQueries extends QueryPack {
           .write.mode("append").parquet(feedDir.toString)
         val sessions = EventsStream.sessionWindowAgg(
           EventsStream.read(s, feedDir))
-        feedSizedPartitions(s, feedDir) {
+        EventsStream.feedSized(s, feedDir) {
           runToCompletion(sessions, "st08_session_window_sink", "append")
         }
           .filter(col("user_id") >= 0)

@@ -68,10 +68,12 @@ object StreamScaleProbe {
 
     def probeStateful(label: String, out: DataFrame, mode: String): Unit = {
       val t0 = System.nanoTime()
-      val q = out.writeStream.format("noop").outputMode(mode)
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-sp-ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
+      val q = EventsStream.feedSized(spark, feedDir) {
+        out.writeStream.format("noop").outputMode(mode)
+          .option("checkpointLocation",
+            Files.createTempDirectory("graft-sp-ckpt").toString)
+          .trigger(Trigger.AvailableNow()).start()
+      }
       q.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9
       val states = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
@@ -107,10 +109,12 @@ object StreamScaleProbe {
     val statePath =
       Files.createTempDirectory("graft-sp-upsert").toString + "/state"
     val t0 = System.nanoTime()
-    val q = EventsStream.latestStateUpsert(feed(), statePath)
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-sp-ckpt7").toString)
-      .trigger(Trigger.AvailableNow()).start()
+    val q = EventsStream.feedSized(spark, feedDir) {
+      EventsStream.latestStateUpsert(feed(), statePath)
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-sp-ckpt7").toString)
+        .trigger(Trigger.AvailableNow()).start()
+    }
     q.awaitTermination()
     val wall = (System.nanoTime() - t0) / 1e9
     val stateRows = spark.read.parquet(statePath).count()

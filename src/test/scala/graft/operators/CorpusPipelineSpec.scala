@@ -182,6 +182,51 @@ class CorpusPipelineSpec extends SparkSuite {
     CorpusPipeline.reset(spark, st)
   }
 
+  /** Part-file names per partition directory of every state table — what
+    * a takedown that touches nothing leaves unchanged. */
+  private def stateFiles(st: CorpusPipeline.State): Map[String, Set[String]] = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    Seq(st.metaRel, st.shardsRel, st.dedup.shinglesRel, st.dedup.bucketsRel,
+        st.dedup.pairsRel).flatMap { rel =>
+      val Array(schema, name) = rel.split('.')
+      val loc = new java.io.File(new java.net.URI(spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(name, Some(schema))).location
+        .toString))
+      loc.listFiles().filter(_.isDirectory).map(d => s"$rel/${d.getName}" ->
+        d.listFiles().map(_.getName).filter(_.startsWith("part-")).toSet)
+    }.toMap
+  }
+
+  test("the snapshot-derived survivor set of a resurrecting takedown " +
+      "equals the one read back from the rewritten tables") {
+    val st = CorpusPipeline.State("pipe_snap_spec")
+    CorpusPipeline.buildHistory(spark,
+      craftedDocs.filter(col("doc_id") <= 102), "doc_id", "text", st)
+    CorpusPipeline.appendBatch(spark,
+      craftedDocs.filter(col("doc_id") > 102), "doc_id", "text", st, "b1")
+    import spark.implicits._
+    def ids(df: DataFrame): Set[Long] =
+      df.select(col("doc_id")).as[Long].collect().toSet
+    // 101's only near-dup predecessor is 100, so taking 100 down
+    // (family {100, 102}) resurrects it.
+    val victims = Seq(100L).toDF("doc_id")
+    val meta = spark.table(st.metaRel)
+    val family = CorpusPipeline.takedownFamily(meta, victims)
+    val (metaLeft, pairsLeft) =
+      CorpusPipeline.withoutFamily(spark, st, meta, family)
+    val snapshot = ids(CorpusPipeline.packedSet(metaLeft, pairsLeft))
+    assert(snapshot == Set(101L, 103L, 104L), snapshot.toString)
+    assert(CorpusPipeline.delete(spark, st, victims)._1 == 2)
+    val readBack = ids(CorpusPipeline.packedSet(spark.table(st.metaRel),
+      DedupStore.allPairs(spark, st.dedup)))
+    assert(readBack == snapshot)
+    // A replayed takedown finds no family and touches no file.
+    val before = stateFiles(st)
+    assert(CorpusPipeline.delete(spark, st, victims) == ((0L, Nil, Nil)))
+    assert(stateFiles(st) == before)
+    CorpusPipeline.reset(spark, st)
+  }
+
   test("delete leaves batches wholly before the family untouched") {
     val st = CorpusPipeline.State("pipe_del_prefix")
     CorpusPipeline.buildHistory(spark,

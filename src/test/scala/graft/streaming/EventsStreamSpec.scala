@@ -21,9 +21,11 @@ class EventsStreamSpec extends SparkSuite {
 
   test("streaming hourly aggregation equals the batch computation") {
     val dir = stageDir(1)
-    val q = EventsStream.hourlyAgg(EventsStream.read(spark, dir))
-      .writeStream.format("memory").queryName("hourly")
-      .outputMode("complete").start()
+    val q = EventsStream.feedSized(spark, dir) {
+      EventsStream.hourlyAgg(EventsStream.read(spark, dir))
+        .writeStream.format("memory").queryName("hourly")
+        .outputMode("complete").start()
+    }
     try {
       q.processAllAvailable()
       val streamed = spark.table("hourly")
@@ -40,8 +42,10 @@ class EventsStreamSpec extends SparkSuite {
     val dir = stageDir(1)
     val mart = Files.createTempDirectory("graft-mart").toString + "/hourly"
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val q = EventsStream.hourlyMart(EventsStream.read(spark, dir), mart)
-      .option("checkpointLocation", ckpt).start()
+    val q = EventsStream.feedSized(spark, dir) {
+      EventsStream.hourlyMart(EventsStream.read(spark, dir), mart)
+        .option("checkpointLocation", ckpt).start()
+    }
     try {
       q.processAllAvailable()
       def readMart() = spark.read.parquet(mart)
@@ -108,7 +112,7 @@ class EventsStreamSpec extends SparkSuite {
     val mart = Files.createTempDirectory("graft-recov-mart").toString + "/h"
     val ckpt = Files.createTempDirectory("graft-recov-ckpt").toString
     @volatile var crashed = false
-    def start() = EventsStream
+    def start() = EventsStream.feedSized(spark, feedDir) { EventsStream
       .hourlyAgg(EventsStream.read(spark, feedDir,
         maxFilesPerTrigger = Some(1)))
       .writeStream.outputMode("update")
@@ -122,7 +126,7 @@ class EventsStreamSpec extends SparkSuite {
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
-      .start()
+      .start() }
     intercept[StreamingQueryException] { start().awaitTermination() }
     assert(crashed, "the injected crash never fired")
     // Restart from the checkpoint: batch 1 replays (its effects are
@@ -145,8 +149,8 @@ class EventsStreamSpec extends SparkSuite {
     val state = Files.createTempDirectory("graft-recov-state").toString + "/s"
     val ckpt = Files.createTempDirectory("graft-recov-ckpt2").toString
     @volatile var crashed = false
-    def start() = EventsStream.read(spark, feedDir,
-        maxFilesPerTrigger = Some(1))
+    def start() = EventsStream.feedSized(spark, feedDir) { EventsStream
+      .read(spark, feedDir, maxFilesPerTrigger = Some(1))
       .writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
         EventsStream.upsertLatest(b, state)
@@ -157,7 +161,7 @@ class EventsStreamSpec extends SparkSuite {
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
-      .start()
+      .start() }
     intercept[StreamingQueryException] { start().awaitTermination() }
     assert(crashed, "the injected crash never fired")
     start().awaitTermination()
@@ -182,8 +186,10 @@ class EventsStreamSpec extends SparkSuite {
     val dir = stageDir(1)
     val mart = Files.createTempDirectory("graft-mart-day").toString + "/hourly"
     val ckpt = Files.createTempDirectory("graft-ckpt-day").toString
-    val q = EventsStream.hourlyMart(EventsStream.read(spark, dir), mart)
-      .option("checkpointLocation", ckpt).start()
+    val q = EventsStream.feedSized(spark, dir) {
+      EventsStream.hourlyMart(EventsStream.read(spark, dir), mart)
+        .option("checkpointLocation", ckpt).start()
+    }
     try {
       q.processAllAvailable()
       // Layout: day-granularity directories (hour is a data column) —
@@ -217,9 +223,11 @@ class EventsStreamSpec extends SparkSuite {
 
   test("stateful sessionization matches the batch gaps-and-islands result") {
     val dir = stageDir(1)
-    val q = EventsStream.sessionize(EventsStream.read(spark, dir))
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
+    val q = EventsStream.feedSized(spark, dir) {
+      EventsStream.sessionize(EventsStream.read(spark, dir))
+        .writeStream.format("memory").queryName("sessions")
+        .outputMode("append").start()
+    }
     try {
       q.processAllAvailable()
       // Advance the watermark far past every session's gap horizon so
@@ -261,9 +269,11 @@ class EventsStreamSpec extends SparkSuite {
     spark.conf.set(providerKey, "org.apache.spark.sql.execution." +
       "streaming.state.RocksDBStateStoreProvider")
     try {
-      val q = EventsStream.sessionizeTws(EventsStream.read(spark, dir))
-        .writeStream.format("memory").queryName("sessions_tws")
-        .outputMode("append").start()
+      val q = EventsStream.feedSized(spark, dir) {
+        EventsStream.sessionizeTws(EventsStream.read(spark, dir))
+          .writeStream.format("memory").queryName("sessions_tws")
+          .outputMode("append").start()
+      }
       try {
         q.processAllAvailable()
         // Same sentinel protocol as the v1 test: advance the watermark
@@ -321,10 +331,12 @@ class EventsStreamSpec extends SparkSuite {
       .write.mode("append").parquet(dir)
 
     def runStream(out: org.apache.spark.sql.DataFrame, name: String) = {
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = EventsStream.feedSized(spark, dir) {
+        out.writeStream.format("memory").queryName(name)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+      }
       q.awaitTermination()
       spark.table(name).filter(col("user_id") >= 0)
     }
@@ -376,9 +388,11 @@ class EventsStreamSpec extends SparkSuite {
 
   test("dropDuplicatesWithinWatermark deduplicates replayed files") {
     val dir = stageDir(2) // the same events delivered twice
-    val q = EventsStream.deduped(EventsStream.read(spark, dir))
-      .writeStream.format("memory").queryName("deduped")
-      .outputMode("append").start()
+    val q = EventsStream.feedSized(spark, dir) {
+      EventsStream.deduped(EventsStream.read(spark, dir))
+        .writeStream.format("memory").queryName("deduped")
+        .outputMode("append").start()
+    }
     try {
       q.processAllAvailable()
       val n = spark.table("deduped").count()
