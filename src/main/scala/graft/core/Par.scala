@@ -13,8 +13,11 @@ package graft.core
   * fails — a half-started sibling write must finish or fail on its own
   * before the caller unwinds, never race a caller's cleanup), then
   * rethrows the first failure with every other branch's failure attached
-  * as suppressed, so no branch's error is lost. Plain threads, one per thunk: callers
-  * pass 2–4 thunks, each seconds long, so pooling would buy nothing.
+  * as suppressed, so no branch's error is lost. Plain threads, one per
+  * thunk: the store protocols pass 2–4 thunks, each seconds long, and
+  * `Runner.registerSources` one per declared source (about ten in the
+  * tpch project), each a listing or one schema-inference job, so pooling
+  * would buy nothing.
   * Spark job-group/description local properties are inherited by child
   * threads (InheritableThreadLocal), so UI attribution is preserved.
   *

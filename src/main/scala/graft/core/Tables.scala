@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -11,6 +13,16 @@ import org.apache.spark.storage.StorageLevel
   * directories; `spark.read.parquet` handles both shapes unchanged, and all
   * downstream code goes through this single entry point so partition-aware
   * reading (bucketing, partition pruning) can be added here once.
+  *
+  * Schema memo: inferring a parquet schema is a one-task Spark job, and a
+  * scheduled refresh loads the same sources on every invocation. [[parquet]]
+  * keeps one entry per (path, the session's parquet/file-source reader
+  * conf): the inferred schema and the file set it was inferred from, as
+  * (path, length, modification time) triples taken from the frame's own
+  * file index. A load whose file set and conf both match reads with the
+  * remembered schema — a listing, no job; any added, removed or rewritten
+  * file, or a changed reader conf, infers exactly as `spark.read.parquet`
+  * does and replaces the entry.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -19,15 +31,56 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  private final case class Memo(files: Set[(String, Long, Long)],
+      schema: StructType)
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, String)]), Memo]
+
+  /** The session conf a parquet schema inference depends on. */
+  private def readerConf(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") ||
+        k.startsWith("spark.sql.files.") || k == "spark.sql.caseSensitive"
+    }.sorted
+
+  /** The files a parquet frame reads, from its own file index; `None`
+    * for a frame whose index cannot list them. */
+  private def fileSet(df: DataFrame): Option[Set[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect {
+      case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        index.allFiles().map(f =>
+          (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    }
+
+  /** `spark.read.parquet(path)`, inferring the schema only when the
+    * path's file set or the reader conf changed since the last load. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val key = (path, readerConf(spark))
+    val hit = Option(memo.get(key)).map { m =>
+      (m, spark.read.schema(m.schema).parquet(path))
+    }.collect { case (m, df) if fileSet(df).contains(m.files) => df }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      // A conf flipped by another thread mid-inference keys nothing.
+      if (readerConf(spark) == key._2)
+        fileSet(df).foreach(fs => memo.put(key, Memo(fs, df.schema)))
+      df
+    }
+  }
 
   /** The events `ts` column has shipped in more than one physical parquet
     * encoding across testdata generations; sniff the footer and adapt
-    * instead of assuming one (see [[EventsLayout]]).
+    * instead of assuming one (see [[EventsLayout]]). The layout's frame is
+    * the read: the schema is inferred at most once.
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
-    val layout = EventsLayout.sniff(spark, s"$dir/events.parquet")
-    layout.normalize(spark.read.parquet(s"$dir/events.parquet"))
+    val (layout, df) = EventsLayout.read(spark, s"$dir/events.parquet")
+    layout.normalize(df)
   }
 
   /** Time-sliced events scan with the range predicate applied in the RAW
@@ -39,10 +92,8 @@ object Tables {
     */
   def eventsBetween(spark: SparkSession, dir: String,
       startUs: Long, endUs: Long): DataFrame = {
-    val layout = EventsLayout.sniff(spark, s"$dir/events.parquet")
-    layout.normalize(
-      spark.read.parquet(s"$dir/events.parquet")
-        .filter(layout.rawTsRange(startUs, endUs)))
+    val (layout, df) = EventsLayout.read(spark, s"$dir/events.parquet")
+    layout.normalize(df.filter(layout.rawTsRange(startUs, endUs)))
   }
 }
 
@@ -54,7 +105,10 @@ object Tables {
   *    `spark.sql.legacy.parquet.nanosAsLong=true`, which surfaces it as a
   *    raw nanos `LongType` → convert with `timestamp_micros(ts div 1000)`.
   *    A plain BIGINT column holding epoch nanos (spec fixtures, scale
-  *    probes) sniffs identically and needs the identical conversion.
+  *    probes) sniffs identically and needs the identical conversion. The
+  *    sniff recognises both from one data file's footer, read on the
+  *    driver with parquet's own `ParquetFileReader`, and only then sets
+  *    the flag.
   *  - timestamp[us] with isAdjustedToUTC=false → Spark reads
   *    `TimestampNTZType` → cast to the session `TimestampType` (sessions
   *    here pin UTC, so wall-clock == instant and the micros are unchanged).
@@ -127,26 +181,71 @@ final case class EventsLayout(schema: StructType, tsType: DataType) {
 object EventsLayout {
   private[core] val NanosFlag = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** Sniff the layout of an events parquet file or directory. The legacy
-    * nanos flag must be on to even schema-read a TIMESTAMP(NANOS) footer;
-    * the prior session value is restored UNLESS the layout turns out to be
-    * the nanos/long encoding — every later data scan of that table re-reads
-    * the footer and needs the flag, so only then does it stay set. A
-    * non-nanos sniff leaves the session conf exactly as it found it. */
-  def sniff(spark: SparkSession, path: String): EventsLayout = {
-    withNanosFlag(spark) { restore =>
-      val schema = spark.read.parquet(path).schema
-      require(schema.fieldNames.contains("ts"),
-        s"events at $path has no `ts` column; found ${schema.fieldNames.mkString(", ")}")
-      val layout = EventsLayout(schema, schema("ts").dataType)
-      if (layout.tsType != LongType) restore()
-      layout
+  /** Sniff the layout of an events parquet file or directory. Spark
+    * cannot even infer the schema of an int64 TIMESTAMP(NANOS) `ts`
+    * unless the legacy nanos flag is on, so one data file's footer is read
+    * on the driver first (no Spark job): only the epoch-nanos long layout
+    * (TIMESTAMP(NANOS), or a plain int64) sets the flag, and it stays set,
+    * since every later scan of that table re-reads the footer and needs
+    * it. Any other encoding leaves the session conf untouched. The schema
+    * itself comes from [[Tables.parquet]]'s memo. */
+  def sniff(spark: SparkSession, path: String): EventsLayout =
+    read(spark, path)._1
+
+  /** The layout and the frame it was sniffed from — the events read. */
+  private[core] def read(spark: SparkSession,
+      path: String): (EventsLayout, DataFrame) = {
+    if (!spark.conf.getOption(NanosFlag).contains("true") &&
+        nanosTs(spark, path))
+      spark.conf.set(NanosFlag, "true")
+    val df = Tables.parquet(spark, path)
+    val schema = df.schema
+    require(schema.fieldNames.contains("ts"),
+      s"events at $path has no `ts` column; found ${schema.fieldNames.mkString(", ")}")
+    (EventsLayout(schema, schema("ts").dataType), df)
+  }
+
+  /** Whether the first data file under `path` (a file, or a directory
+    * searched recursively, skipping `_`/`.` entries as Spark does) stores
+    * `ts` as epoch-nanos int64 — TIMESTAMP(NANOS) or unannotated — from
+    * its footer alone. */
+  private def nanosTs(spark: SparkSession, path: String): Boolean = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit,
+      TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val hidden = (p: Path) => p.getName.startsWith("_") || p.getName.startsWith(".")
+    val files = fs.listFiles(root, true)
+    val first = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(_.getPath).find { p =>
+        Iterator.iterate(p)(_.getParent)
+          .takeWhile(q => q != null && q.depth > root.depth).forall(!hidden(_))
+      }
+    first.exists { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      val schema =
+        try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+      schema.containsField("ts") && {
+        val ts = schema.getType(schema.getFieldIndex("ts"))
+        ts.isPrimitive &&
+          ts.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+          (ts.getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+            case _ => true
+          })
+      }
     }
   }
 
   /** Run `body` with the nanos flag set; `body` receives a restore thunk
     * putting the flag back to its pre-call state (set-or-unset). On throw,
-    * the flag is always restored. */
+    * the flag is always restored. Only [[SchemaCanary]]'s footer reads use
+    * it; loading a source never toggles the session conf. */
   private[core] def withNanosFlag[A](spark: SparkSession)(
       body: (() => Unit) => A): A = {
     val prior = spark.conf.getOption(NanosFlag)

@@ -975,11 +975,24 @@ final class Runner(
     }
   }
 
-  def registerSources(spark: SparkSession): Unit =
-    project.sources.foreach { sd =>
-      sd.load(spark)
+  /** Load every declared source once and register it as its
+    * `src_<source>_<table>` view, all sources at once (one [[graft.core.Par]]
+    * thread each): a file source whose files did not change costs a
+    * listing ([[graft.core.Tables]]' schema memo), so what remains is
+    * per-source driver latency, which overlaps. Loaders are re-evaluated
+    * on every call — a loader may close over state that changes between
+    * invocations. Each load names its jobs `source <name>.<table>` and
+    * restores the caller's description afterwards. */
+  def registerSources(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    graft.core.Par.run(project.sources.map { sd => () =>
+      val callerDescription = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"source ${sd.sourceName}.${sd.table}")
+      try sd.load(spark)
         .createOrReplaceTempView(sourceRelation(sd.sourceName, sd.table))
-    }
+      finally sc.setJobDescription(callerDescription)
+    }: _*)
+  }
 
   private def isEphemeral(name: String): Boolean =
     byName(name).materialization == Materialization.Ephemeral
@@ -1282,7 +1295,9 @@ final class Runner(
     * build covers `begin` (or the earliest input event) through the
     * latest input event; a re-run starts `lookback` batches behind the
     * last processed batch. Bounds come from per-input min/max aggregates
-    * — column-pruned scans a columnar source answers from statistics. */
+    * — column-pruned scans a columnar source answers from statistics.
+    * A source's bounds read the view [[registerSources]] registered for
+    * this invocation, so the source is not loaded a second time. */
   private def microbatchPeriods(spark: SparkSession, sm: SqlModel,
       mb: Materialization.Microbatch, relation: String,
       fresh: Boolean): Seq[(String, String)] = {
@@ -1300,7 +1315,7 @@ final class Runner(
       sm.sources.flatMap { case (a, b) =>
         project.sources.find(sd => sd.sourceName == a && sd.table == b)
           .flatMap(sd => sd.eventTimeField.flatMap(c =>
-            minMax(sd.load(spark), c)))
+            minMax(spark.table(sourceRelation(a, b)), c)))
       } ++ sm.refs.flatMap { r =>
         val rm = byName(r)
         // Ephemeral refs are never materialized — their bounds come
@@ -1581,9 +1596,10 @@ final class Runner(
     * once all its selected upstreams have finished. Node bodies cannot
     * race session conf: the only `conf.set` a node reaches is the sticky
     * dynamic-overwrite set in [[CatalogMaterializer]]'s
-    * `materializeIncremental`, which only ever writes one value, and
-    * `EventsLayout.withNanosFlag` runs only in [[registerSources]], on
-    * the caller thread, before the pool starts. Each worker names its
+    * `materializeIncremental`, which only ever writes one value.
+    * [[registerSources]] runs before the pool starts and toggles no conf:
+    * the only set it can reach is the events sniff's sticky nanos flag,
+    * which likewise only ever writes one value. Each worker names its
     * Spark jobs after its node (`spark.job.description`): concurrent
     * nodes' jobs interleave, so time order no longer attributes them. */
   private def runParallel(spark: SparkSession, ordered: Seq[String],

@@ -2,6 +2,7 @@ package graft.model
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, explode}
 
 import graft.SparkSuite
@@ -249,7 +250,8 @@ class RunnerSpec extends SparkSuite {
       tmp.resolve("catalog.json").toString)
     val manifest = spark.read.json(tmp.resolve("manifest.json").toString)
     val nModels = TpchProject.project(dir).models.size
-    import org.apache.spark.sql.functions.{col, explode}
+    import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, explode}
     assert(manifest.select(explode(col("nodes"))).count() == nModels)
     val parents = manifest
       .select(col("parent_map.customer_order_metrics")).head
@@ -412,6 +414,81 @@ class RunnerSpec extends SparkSuite {
 
     intercept[IllegalArgumentException](
       runner.run(spark, select = Some("state:modified")))
+  }
+
+  /** `body`'s result and the descriptions of the Spark jobs it started
+    * (on its thread or on threads it spawned). */
+  private def jobDescriptions[A](body: => A): (A, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"runner-spec-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(
+            String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val a = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (a, seen.toArray.map(_.toString).toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a microbatch model's source is loaded once per run") {
+    import spark.implicits._
+    val loads = new java.util.concurrent.atomic.AtomicInteger
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val feed = Seq(("2024-01-01 05:00:00", 1.0), ("2024-01-02 05:00:00", 2.0))
+      .toDF("tss", "v")
+      .select(org.apache.spark.sql.functions.to_timestamp(col("tss"))
+        .as("ts"), col("v"))
+    def counted(table: String, df: DataFrame) = SourceDef("t", table, s => {
+      if (table == "mb_ev") loads.incrementAndGet()
+      descriptions.add(s.sparkContext.getLocalProperty("spark.job.description"))
+      df
+    }, eventTimeField = Some("ts"))
+    val mb = SqlModel("mb_once", "SELECT ts, v FROM {{ source('t', 'mb_ev') }}",
+      Materialization.Microbatch("ts", "day"), eventTime = Some("ts"))
+    val runner = new Runner(
+      Project(Seq(counted("mb_ev", feed), counted("mb_side", feed)), Seq(mb)),
+      Target.dev, new PathMaterializer(
+        Files.createTempDirectory("graft-mb-once").toString))
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      runner.run(spark)
+      assert(loads.get == 1)
+      assert(spark.table("dev_mb_once").count() == 2)
+      runner.run(spark)
+      assert(loads.get == 2)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+    assert(descriptions.toArray.toSet ==
+      Set("source t.mb_ev", "source t.mb_side"))
+  }
+
+  test("testReport right after run runs no source inference job") {
+    val src = Files.createTempDirectory("graft-src-memo")
+    Seq("orders", "customer", "lineitem", "nation", "region").foreach { t =>
+      Files.copy(Paths.get(s"$dir/$t.parquet"), src.resolve(s"$t.parquet"))
+    }
+    val runner = TpchProject.runner(src.toString)
+    val (results, runJobs) = jobDescriptions(runner.run(spark))
+    assert(results.forall(_.status == "success"))
+    // A cold load infers each file source's schema, in a named job.
+    assert(Seq("orders", "customer", "lineitem", "nation", "region")
+      .forall(t => runJobs.contains(s"source tpch.$t")), runJobs)
+    val (report, testJobs) = jobDescriptions(runner.testReport(spark))
+    assert(testJobs.isEmpty, testJobs)
+    assert(report.filter(col("violations") =!= 0).count() == 0)
   }
 
   test("source freshness reports max(loaded_at) and age per source") {
