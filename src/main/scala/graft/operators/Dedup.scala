@@ -281,25 +281,39 @@ object Dedup {
     cross.union(within)
   }
 
-  /** Stage 2 of [[jaccardPairs]]: exact pairs over (doc_id, shingles)
-    * rows with distinct shingle sets. */
-  private def prefixFilteredPairs(sh: DataFrame,
-      threshold: Double): DataFrame = {
-    val ex = sh.select(col("doc_id"), size(col("shingles")).as("n_sh"),
+  /** `(doc_id, n_sh, shingle)`: one row per shingle of each
+    * `(doc_id, shingles)` row, carrying the set's size. */
+  private def exploded(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), size(col("shingles")).as("n_sh"),
       explode(col("shingles")).as("shingle"))
-    val docFreq = ex.groupBy(col("shingle"))
-      .agg(count(lit(1)).as("df"))
+
+  /** The persisted `(doc_id, shingle)` prefix filter shared by
+    * [[jaccardPairs]] and [[containmentPairs]]: each document's
+    * `n_sh − ⌊t·n_sh⌋ + 1` globally-rarest shingles over [[exploded]]
+    * rows (shingle document frequency ascending, ties on the shingle).
+    * The bound varies per row, so this is an explicit window, not a
+    * fixed-k [[graft.core.TopK]]. Persisted (Caches-registered): the
+    * candidate self-join would otherwise recompute the whole
+    * explode→docFreq-join→window pipeline once per side (verified in
+    * the physical plan) — at corpus scale that doubles the dominant
+    * stage. */
+  private def rarestPrefix(ex: DataFrame, threshold: Double)
+      : DataFrame = {
+    val docFreq = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("df"), col("shingle"))
-    // Persisted (Caches-registered): the self-join below would otherwise
-    // recompute the whole explode→docFreq-join→window pipeline once per
-    // side (verified in the physical plan) — at corpus scale that doubles
-    // the dominant stage.
-    val prefix = Caches.persist(ex.join(docFreq, "shingle")
+    Caches.persist(ex.join(docFreq, "shingle")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <=
         col("n_sh") - floor(lit(threshold) * col("n_sh")) + 1)
       .select(col("doc_id"), col("shingle")))
+  }
+
+  /** Stage 2 of [[jaccardPairs]]: exact pairs over (doc_id, shingles)
+    * rows with distinct shingle sets. */
+  private def prefixFilteredPairs(sh: DataFrame,
+      threshold: Double): DataFrame = {
+    val prefix = rarestPrefix(exploded(sh), threshold)
     val candidates = prefix.as("a")
       .join(prefix.as("b"),
         col("a.shingle") === col("b.shingle") &&
@@ -410,16 +424,9 @@ object Dedup {
     val sh = shingled(docs, idCol, textCol, n)
     val groups = clusters(sh)
     val reps = groups.select(col("doc_id"), col("shingles"))
-    val ex = reps.select(col("doc_id"), size(col("shingles")).as("n_sh"),
-      explode(col("shingles")).as("shingle"))
-    val docFreq = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("df"), col("shingle"))
-    val prefix = Caches.persist(ex.join(docFreq, "shingle")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <=
-        col("n_sh") - floor(lit(threshold) * col("n_sh")) + 1)
-      .select(col("doc_id").as("doc_a"), col("shingle")))
+    val ex = exploded(reps)
+    val prefix = rarestPrefix(ex, threshold)
+      .withColumnRenamed("doc_id", "doc_a")
     val candidates = prefix
       .join(ex.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
       .filter(col("doc_a") =!= col("doc_b"))

@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.TopK
 import graft.functions.TextFunctions
 
 /** Hybrid retrieval — the fusion step every retrieval-for-curation
@@ -26,9 +26,11 @@ import graft.functions.TextFunctions
   * full-outer equi-join between two (queries × N)-row frames — tiny by
   * construction regardless of corpus size. The lexical arm broadcasts
   * the query token set INTO the postings join (the t26 discipline: the
-  * filter reaches the scan) and ranks with the salted two-stage top-k
-  * (the [[PostingsStore.topK]] shape), so a stop-word-grade query term
-  * never lands df(term) rows in one sort task.
+  * filter reaches the scan) and ranks with [[graft.core.TopK.perKey]]
+  * (the [[PostingsStore.topK]] shape), whose partial WindowGroupLimit
+  * keeps at most k rows per query per map partition before the
+  * shuffle, so a stop-word-grade query term never lands df(term) rows
+  * in one sort task.
   */
 object HybridRetrieval {
 
@@ -83,27 +85,10 @@ object HybridRetrieval {
           6).cast("decimal(18,6)").as("term_score"))
       .groupBy(col("qid"), col("doc_id"))
       .agg(sum(col("term_score")).as("score"))
-    saltedTopK(scored, col("qid"), col("score").desc, k, "rank_lex")
+    TopK.perKey(scored, Seq(col("qid")),
+        Seq(col("score").desc, col("doc_id")), k, "rank_lex")
       .select(col("qid"), col("doc_id"), col("score"),
         col("rank_lex"))
-  }
-
-  /** Exact per-qid top-k via the salted two-stage ranking
-    * ([[PostingsStore.topK]]'s shape): stage 1 bounds each window task
-    * at candidates/32, stage 2 ranks the ≤ 32·k survivors. Requires
-    * (order, doc_id) to be a total order per qid. */
-  private[operators] def saltedTopK(scored: DataFrame, qid: Column,
-      order: Column, k: Int, rankCol: String): DataFrame = {
-    val w1 = Window.partitionBy(qid, col("__salt"))
-      .orderBy(order, col("doc_id"))
-    val local = scored
-      .withColumn("__salt", pmod(xxhash64(col("doc_id")), lit(32)))
-      .withColumn("__rk", row_number().over(w1))
-      .filter(col("__rk") <= k)
-      .drop("__rk", "__salt")
-    val w = Window.partitionBy(qid).orderBy(order, col("doc_id"))
-    local.withColumn(rankCol, row_number().over(w))
-      .filter(col(rankCol) <= k)
   }
 
   /** Reciprocal-rank fusion of two per-query rankings — `lex(qid,
@@ -122,10 +107,8 @@ object HybridRetrieval {
           6).as("rrf"),
         coalesce(col("rank_lex"), lit(0)).cast("long").as("rank_lex"),
         coalesce(col("rank_vec"), lit(0)).cast("long").as("rank_vec"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-    fused.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    TopK.perKey(fused, Seq(col("qid")),
+        Seq(col("rrf").desc, col("doc_id")), k, "rk")
       .select(col("qid"), col("rk"), col("doc_id"), col("rrf"),
         col("rank_lex"), col("rank_vec"))
   }
@@ -161,10 +144,8 @@ object HybridRetrieval {
           coalesce(col("nv"), lit(0.0))) / lit(2.0), 6).as("mix"),
         round(coalesce(col("nl"), lit(0.0)), 6).as("norm_lex"),
         round(coalesce(col("nv"), lit(0.0)), 6).as("norm_vec"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("mix").desc, col("doc_id"))
-    fused.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    TopK.perKey(fused, Seq(col("qid")),
+        Seq(col("mix").desc, col("doc_id")), k, "rk")
       .select(col("qid"), col("rk"), col("doc_id"), col("mix"),
         col("norm_lex"), col("norm_vec"))
   }

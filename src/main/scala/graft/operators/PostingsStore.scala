@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.TopK
 import graft.functions.TextFunctions
 import graft.model.CatalogMaterializer
 
@@ -114,7 +114,10 @@ object PostingsStore {
     * n_docs/avgdl is one thin aggregate over `doc_lengths`. The float
     * discipline is t24's, verbatim: idf and the saturation term as one
     * identically-parenthesized double expression, 6dp-rounded, ties on
-    * doc_id. */
+    * doc_id. The per-term ranking is [[TopK.perKey]]: each map partition
+    * keeps at most k rows per term before the shuffle (Spark's partial
+    * WindowGroupLimit), so a stop-word-grade query term never lands its
+    * whole posting list in one sort task. */
   def topK(spark: SparkSession, store: PostingsStore,
       queryTerms: DataFrame, k: Int): DataFrame = {
     val tf = spark.table(store.postingsRel)
@@ -137,28 +140,8 @@ object PostingsStore {
           (col("tf") + lit(1.2) *
             (lit(1.0) - 0.75 + lit(0.75) * col("dl") / col("avgdl")))),
           6))
-    // SALTED two-stage top-k: a single per-term window puts df(term)
-    // rows in ONE sort task, and a stop-word-grade query term makes
-    // that the whole corpus. Stage 1 ranks within (token, salt) — each
-    // window task bounded by df(term)/Salts — and keeps k; stage 2
-    // ranks the ≤ Salts·k survivors per term. Exact, not approximate:
-    // every global top-k row is its salt's top-k row, and (score desc,
-    // doc_id) is a total order so both stages are deterministic. The
-    // salt assignment (xxhash64 of doc_id) only partitions the work —
-    // the output is salt-independent.
-    val salts = 32
-    val w1 = Window.partitionBy(col("token"), col("__salt"))
-      .orderBy(col("score").desc, col("doc_id"))
-    val local = scored
-      .withColumn("__salt", pmod(xxhash64(col("doc_id")), lit(salts)))
-      .withColumn("__rk", row_number().over(w1))
-      .filter(col("__rk") <= k)
-      .drop("__rk", "__salt")
-    val w = Window.partitionBy(col("token"))
-      .orderBy(col("score").desc, col("doc_id"))
-    local
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    TopK.perKey(scored, Seq(col("token")),
+        Seq(col("score").desc, col("doc_id")), k, "rk")
       .select(col("token"), col("rk"), col("doc_id"), col("tf"),
         col("score"))
   }
@@ -171,11 +154,14 @@ object PostingsStore {
       : DataFrame = {
     val tf = spark.table(store.postingsRel)
     val term = tf.groupBy(col("token")).agg(sum(col("tf")).as("cnt"))
-    val w0 = Window.orderBy(col("cnt").desc, col("token"))
-    val qterms = term.orderBy(col("cnt").desc, col("token")).limit(20)
-      .withColumn("r", row_number().over(w0))
-      .filter(col("r") > 10)
-      .select(col("token"))
-    topK(spark, store, qterms, k)
+    topK(spark, store, midFrequencyTerms(term), k)
   }
+
+  /** The mid-frequency query set t24, t26 and t31 score: the `term`
+    * rows (one per `token`, with its corpus count `cnt`) ranked 11..20
+    * by `(cnt desc, token)` — past the stop-word head, still frequent
+    * enough that every query has a full candidate list. One
+    * distributed TakeOrdered(20) that skips the first 10; no window. */
+  private[operators] def midFrequencyTerms(term: DataFrame): DataFrame =
+    term.orderBy(col("cnt").desc, col("token")).limit(20).offset(10)
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Q, QueryPack, Tables}
+import graft.core.{Q, QueryPack, Tables, TopK}
 
 /** Relational operator inventory (SURVEY.md §2) expressed over the driver
   * testdata, one query per operator family, each with a DuckDB oracle.
@@ -277,11 +277,8 @@ object RelationalQueries extends QueryPack {
     // ---- window ranking: top-3 orders per customer, deterministic ties.
     Q("q10_window_topk",
       (s, dir) => {
-        val w = Window.partitionBy(col("o_custkey"))
-          .orderBy(col("o_orderdate"), col("o_orderkey"))
-        Tables(s, dir, "orders")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
+        TopK.perKey(Tables(s, dir, "orders"), Seq(col("o_custkey")),
+            Seq(col("o_orderdate"), col("o_orderkey")), 3, "rn")
           .select(col("o_custkey"), col("o_orderkey"), col("rn"))
           .orderBy(col("o_custkey"), col("rn"))
       },

@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.core.{Caches, Checkpoints}
+import graft.core.{Caches, Checkpoints, TopK}
 import graft.functions.Hashing
 
 /** Similarity search over an embedding column (array<float>).
@@ -54,10 +53,8 @@ object Similarity {
     val scored = corpus.join(broadcast(q), col("vid") =!= col("qid"))
       .select(col("qid"), col("vid").as("nid"),
         sim(col("qv"), col("qn"), col("v"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("sim").desc, col("nid")),
+      k, "rn")
   }
 
   /** Identical-vector clusters: one row per distinct (v, nrm), keyed by
@@ -234,10 +231,8 @@ object Similarity {
       .join(corpus.select(col("vid").as("nid"), col("v"), col("nrm")), "nid")
       .select(col("qid"), col("nid"),
         sim(col("qv"), col("qn"), col("v"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("sim").desc, col("nid")),
+      k, "rn")
       .select(col("qid"), col("nid"), col("sim"), col("rn"))
   }
 
@@ -538,10 +533,8 @@ object Similarity {
       .filter(col("vid") =!= col("qid"))
       .select(col("qid"), col("vid").as("nid"),
         sim(col("qv"), col("qn"), col("v"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("sim").desc, col("nid")),
+      k, "rn")
   }
 
   /** FILTERED ANN — IVF search under a per-query metadata predicate
@@ -574,10 +567,8 @@ object Similarity {
       .filter(col("vid") =!= col("qid") && col("meta") === col("qmeta"))
       .select(col("qid"), col("meta").as("label"), col("vid").as("nid"),
         sim(col("qv"), col("qn"), col("v"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("sim").desc, col("nid")),
+      k, "rn")
   }
 
   /** RANGE (radius) search — every corpus neighbor with cosine ≥ `tau`
@@ -631,10 +622,8 @@ object Similarity {
   def knnGraph(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       nlist: Option[Int] = None, nprobe: Int = 4): DataFrame = {
     val scored = knnGraphScored(emb, idCol, vecCol, nlist, nprobe)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("sim").desc, col("nid")),
+      k, "rn")
   }
 
   /** [[knnGraph]]'s pre-ranking candidate frame — exposed for the scale
@@ -695,10 +684,8 @@ object Similarity {
       .select(col("qid"), col("vid").as("nid"),
         round(Hashing.dotProduct(col("qq"), col("q")) /
           (col("qqn") * col("qn")), 6).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("sim").desc, col("nid")),
+      k, "rn")
   }
 
   /** Product-quantization (PQ) top-k — THE memory-bound ANN layout: the
@@ -825,10 +812,8 @@ object Similarity {
     val scored = encoded.join(broadcast(q), col("vid") =!= col("qid"))
       .select(col("qid"), col("vid").as("nid"),
         round(pqAdcScore(col("qv"), centers, subDim), 6).as("score"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("score").desc, col("nid")),
+      k, "rn")
   }
 
   /** IVF + PQ — THE production ANN layout at 100 TB: the IVF coarse index
@@ -886,10 +871,8 @@ object Similarity {
       .filter(col("vid") =!= col("qid"))
       .select(col("qid"), col("vid").as("nid"),
         round(pqAdcScore(col("qv"), centers, subDim), 6).as("score"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("score").desc, col("nid")),
+      k, "rn")
   }
 
   /** 1-bit (sign) quantization + Hamming ranking — the extreme end of
@@ -940,10 +923,8 @@ object Similarity {
     val scored = corpus.join(broadcast(q), col("vid") =!= col("qid"))
       .select(col("qid"), col("vid").as("nid"),
         bit_count(col("qs").bitwiseXOR(col("s"))).as("hamming"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("hamming"), col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("hamming"), col("nid")),
+      k, "rn")
   }
 
   /** Two-stage retrieval — candidate generation + exact re-rank, the
@@ -997,10 +978,8 @@ object Similarity {
       .join(broadcast(q), Seq("qid"))
     val scored = fetched.select(col("qid"), col("nid"),
       sim(col("qv"), col("qn"), col("v"), col("nrm")).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("sim").desc, col("nid")),
+      k, "rn")
   }
 
   /** ANN quality telemetry: recall@k of each approximate path against

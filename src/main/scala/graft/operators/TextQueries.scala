@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Q, QueryPack, Tables}
+import graft.core.{Q, QueryPack, Tables, TopK}
 import graft.functions.TextFunctions._
 
 /** Text-analysis queries over the `documents` table (LLM-pipeline tier):
@@ -211,14 +211,12 @@ object TextQueries extends QueryPack {
         val df = tf.groupBy(col("token"))
           .agg(countDistinct(col("doc_id")).as("df"))
         val n = docs.agg(count(lit(1)).as("n_docs"))
-        val w = Window.partitionBy(col("doc_id"))
-          .orderBy(col("score").desc, col("token"))
         tf.join(df, "token")
           .crossJoin(broadcast(n))
           .withColumn("score",
             round(col("tf") * log(col("n_docs") / col("df")), 6))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= 3)
+          .transform(TopK.perKey(_, Seq(col("doc_id")),
+            Seq(col("score").desc, col("token")), 3, "rk"))
           .select(col("doc_id"), col("rk"), col("token"), col("score"))
           .orderBy(col("doc_id"), col("rk"))
       },
@@ -1035,8 +1033,9 @@ object TextQueries extends QueryPack {
     // every query has a full candidate list) — so the gate needs no
     // external query table and stays deterministic. Scale shape: the
     // postings list (tf) is built once (one shuffle); the 10-term query
-    // list arrives via TakeOrdered(20) + a 20-row window and is
-    // BROADCAST into the postings join, so scoring is candidate-driven
+    // list arrives via TakeOrdered(20) skipping the first 10
+    // (PostingsStore.midFrequencyTerms) and is BROADCAST into the
+    // postings join, so scoring is candidate-driven
     // (only the 10 terms' postings survive — never corpus²); per-doc
     // length joins on doc_id (one shuffle, candidate-sized left side);
     // the final top-5 window partitions by term (10 partitions). Float
@@ -1055,18 +1054,11 @@ object TextQueries extends QueryPack {
         val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
         val term = tf.groupBy(col("token"))
           .agg(sum(col("tf")).as("cnt"), count(lit(1)).as("df"))
-        // top-20 by corpus count via distributed TakeOrdered; the rank
-        // window then runs over just those 20 rows.
-        val w0 = Window.orderBy(col("cnt").desc, col("token"))
-        val qterms = term.orderBy(col("cnt").desc, col("token")).limit(20)
-          .withColumn("r", row_number().over(w0))
-          .filter(col("r") > 10)
+        val qterms = PostingsStore.midFrequencyTerms(term)
           .select(col("token"), col("df"))
         val stats = dl.agg(
           count(lit(1)).cast("double").as("n_docs"),
           (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-        val w = Window.partitionBy(col("token"))
-          .orderBy(col("score").desc, col("doc_id"))
         tf.join(broadcast(qterms), "token")
           .join(dl, "doc_id")
           .crossJoin(broadcast(stats))
@@ -1078,8 +1070,8 @@ object TextQueries extends QueryPack {
               (col("tf") + lit(1.2) *
                 (lit(1.0) - 0.75 + lit(0.75) * col("dl")
                   / col("avgdl")))), 6))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= 5)
+          .transform(TopK.perKey(_, Seq(col("token")),
+            Seq(col("score").desc, col("doc_id")), 5, "rk"))
           .select(col("token"), col("rk"), col("doc_id"), col("tf"),
             col("score"))
           .orderBy(col("token"), col("rk"))
@@ -1203,9 +1195,10 @@ object TextQueries extends QueryPack {
     // decimal; |q| * lengthTerm is integer x decimal; the output
     // serializes the 6dp score in integer MICRO-units — no decimal
     // and no decimal-to-double cast ever leaves the frame. Ranking
-    // uses the salted two-stage top-k (mid-frequency query terms have
-    // corpus-sized candidate lists; a single global rank window would
-    // serialize them into one task).
+    // is one keyless TopK.perKey, which Catalyst plans as a
+    // TakeOrdered(10): each map partition keeps its own top 10, so the
+    // corpus-sized candidate list of mid-frequency query terms never
+    // serializes into one task.
     Q("t31_query_likelihood",
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
@@ -1218,10 +1211,7 @@ object TextQueries extends QueryPack {
         val term = tf.groupBy(col("token")).agg(sum(col("tf")).as("cnt"))
         // t24's mid-frequency query set (corpus-count ranks 11-20),
         // carrying cnt = collection frequency for the smoothing term.
-        val w0 = Window.orderBy(col("cnt").desc, col("token"))
-        val qterms = term.orderBy(col("cnt").desc, col("token")).limit(20)
-          .withColumn("r", row_number().over(w0))
-          .filter(col("r") > 10)
+        val qterms = PostingsStore.midFrequencyTerms(term)
           .select(col("token"), col("cnt"))
         val cc = tf.agg(sum(col("tf")).as("C"))
         val m = tf.join(broadcast(qterms), "token")
@@ -1237,9 +1227,8 @@ object TextQueries extends QueryPack {
             lit(10) *
               round(log(lit(2000.0) / (col("dl") + lit(2000))), 12)
                 .cast("decimal(20,12)"))
-          .withColumn("qid", lit(1))
-        HybridRetrieval
-          .saltedTopK(scored, col("qid"), col("score").desc, 10, "rk")
+        TopK.perKey(scored, Nil, Seq(col("score").desc, col("doc_id")),
+            10, "rk")
           .select(col("rk"), col("doc_id"), col("matched"),
             (round(col("score"), 6) * lit(1000000)).cast("long")
               .as("ql_micro"))

@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.TopK
 import graft.model.CatalogMaterializer
 
 /** Persisted, appendable IVF-PQ index — the production ANN lifecycle
@@ -119,10 +119,8 @@ object VectorIndex {
       .select(col("qid"), col("vid").as("nid"),
         round(Similarity.pqAdcScore(col("qv"), centers, subDim), 6)
           .as("score"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    TopK.perKey(scored, Seq(col("qid")), Seq(col("score").desc, col("nid")),
+      k, "rn")
   }
 
   /** The frozen codebook — (coarse centroids in cid order, PQ seed

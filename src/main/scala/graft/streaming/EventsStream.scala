@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -278,13 +277,13 @@ object EventsStream {
     * merge with hand-ordered batches. */
   private[streaming] def upsertLatest(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("us").desc, col("event_id").desc)
+    def latestPerUser(df: DataFrame): DataFrame =
+      graft.core.TopK.perKey(df, Seq(col("user_id")),
+        Seq(col("us").desc, col("event_id").desc), 1, "rn").drop("rn")
     val latest = batch
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("event_type"), col("value"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
+      .transform(latestPerUser)
     val current = try spark.read.parquet(path)
       catch { case _: org.apache.spark.sql.AnalysisException =>
         latest.limit(0) // first trigger: no state table yet
@@ -293,8 +292,7 @@ object EventsStream {
     // lineage first (|keys| + |batch keys| rows — bounded by design).
     val merged = latest.unionByName(
         current.select(latest.columns.map(col): _*))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
+      .transform(latestPerUser)
       .transform(graft.core.Checkpoints.truncate)
     merged.write.mode("overwrite").parquet(path)
     // Dead after the write — free per trigger (bounded-registry rule).

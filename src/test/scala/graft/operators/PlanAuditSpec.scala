@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSuite}
+import graft.core.TopKSpec
 
 /** Physical-plan regression tests: the scale-shaping properties the
   * scaladocs claim (broadcast choices, pushdown, shuffle counts) asserted
@@ -443,28 +444,42 @@ class PlanAuditSpec extends SparkSuite {
       s"g04 rounds must stay equi-join message passing:\n$p")
   }
 
-  test("BM25 store top-k is the salted two-stage ranking — no window " +
-      "task ever holds a full df(term) posting list") {
+  test("BM25 store top-k bounds each term's shuffle — no window task " +
+      "ever holds a full df(term) posting list") {
     // A stop-word-grade query term would put its whole posting list in
-    // one sort task under a single per-term window; stage 1 must rank
-    // within (token, __salt) and stage 2 over the <= salts*k survivors.
+    // one sort task under a plain per-term window; Spark's partial
+    // WindowGroupLimit must keep <= k rows per term per map partition
+    // beneath the per-token exchange (the salted two-stage ranking it
+    // replaced must not come back).
     val p = plan("t26_bm25_store")
-    assert(p.contains("__salt"),
-      s"topK lost its salted first-stage ranking:\n$p")
+    assert(TopKSpec.partialLimitBelowExchange(p, "token"),
+      s"topK lost its partial group limit below the token exchange:\n$p")
+    assert(!p.contains("__salt"), s"salted ranking is back:\n$p")
   }
 
-  test("hybrid interpolation keeps both arms bounded: salted lexical " +
-      "ranking survives the fuse, no cartesian anywhere") {
+  test("hybrid interpolation keeps both arms bounded: the lexical " +
+      "ranking's partial limit survives the fuse, no cartesian anywhere") {
     // The fuse and min-max normalization are (seeds x k)-row ops; the
     // corpus-sized work must stay inside the arms — the lexical arm's
-    // salted two-stage ranking (t26's pin) and the broadcast cosine
+    // per-qid partial group limit (t26's pin) and the broadcast cosine
     // arm. A cartesian or nested-loop join here means an arm leaked
     // past its candidate bound.
     val p = plan("t30_hybrid_interpolation")
-    assert(p.contains("__salt"),
-      s"t30's lexical arm lost its salted first-stage ranking:\n$p")
+    assert(TopKSpec.partialLimitBelowExchange(p, "qid"),
+      s"t30's lexical arm lost its partial group limit:\n$p")
+    assert(!p.contains("__salt"), s"salted ranking is back:\n$p")
     assert(!p.contains("CartesianProduct"),
       s"t30 must not plan a cartesian:\n$p")
+  }
+
+  test("k-NN graph top-k keeps at most k rows per qid per partition " +
+      "before the qid exchange") {
+    // The baseline a bounded top-k aggregate would have to beat: the
+    // candidate volume grows with the corpus, the rows crossing the
+    // per-query shuffle must not.
+    val p = plan("v24_knn_graph_auto")
+    assert(TopKSpec.partialLimitBelowExchange(p, "qid"),
+      s"v24 lost its partial group limit below the qid exchange:\n$p")
   }
 
   test("canonical keep (d07) selects per-cluster winners with a hash " +
