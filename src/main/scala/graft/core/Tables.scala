@@ -2,11 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** Loader for the driver testdata layout (`TESTDATA.md`): one parquet file
   * per table under `\$dir/`. At 100 TB these would be partitioned parquet
@@ -269,133 +267,3 @@ final case class Q(
     oracle: Option[String])
 
 trait QueryPack { def queries: Seq[Q] }
-
-/** Registry for DataFrames persisted inside operator pipelines (dedup /
-  * similarity caches). A persist without a matching unpersist pins executor
-  * memory for the life of the session — harmless in a one-query job, but a
-  * session that runs the whole query inventory (Bench, Verify) would
-  * accumulate every pipeline's cache. Pipelines register their persists
-  * here; the harness calls [[releaseAll]] between queries.
-  *
-  * Spark keys its cache by plan, not by DataFrame: two frames with the
-  * same plan share ONE cache entry. Registrations are therefore counted
-  * per entry — persisting a plan that is already registered adds a handle
-  * instead of a second `persist` (which Spark only warns about), and the
-  * entry is unpersisted when its last handle is released, so releasing
-  * one caller's handle never drops data another caller still reads.
-  */
-object Caches {
-  private final class Entry(val plan: LogicalPlan, val cached: DataFrame) {
-    val handles = scala.collection.mutable.ArrayBuffer[DataFrame](cached)
-  }
-  private val entries = scala.collection.mutable.ArrayBuffer.empty[Entry]
-
-  def persist(df: DataFrame): DataFrame = {
-    val plan = df.queryExecution.analyzed
-    synchronized {
-      entries.find(_.plan.sameResult(plan)) match {
-        case Some(e) =>
-          e.handles += df
-          // Re-pin an entry something outside the registry unpersisted.
-          if (df.storageLevel == StorageLevel.NONE) df.persist()
-        case None => entries += new Entry(plan, df.persist())
-      }
-    }
-    df
-  }
-
-  /** Release ONE registered handle as soon as its last consumer ran —
-    * what a long streamed ingest needs (one cached frame per
-    * micro-batch would otherwise accumulate until releaseAll). The cache
-    * entry is unpersisted with its last handle; a frame this registry
-    * does not hold is unpersisted directly. */
-  def release(df: DataFrame): Unit = synchronized {
-    entries.indexWhere(_.handles.exists(_ eq df)) match {
-      case -1 => df.unpersist(blocking = false)
-      case i =>
-        val e = entries(i)
-        e.handles.remove(e.handles.indexWhere(_ eq df))
-        if (e.handles.isEmpty) {
-          entries.remove(i)
-          e.cached.unpersist(blocking = false)
-        }
-    }
-  }
-
-  def releaseAll(): Unit = {
-    synchronized {
-      entries.foreach(_.cached.unpersist(blocking = false))
-      entries.clear()
-    }
-    // Checkpoint-truncated frames are the other class of gate-lifetime
-    // pinned blocks; one harness call releases both.
-    Checkpoints.releaseAll()
-  }
-}
-
-/** Lineage truncation for iterative DataFrame algorithms (connected
-  * components, label propagation): a plain persist skips re-EXECUTION but
-  * not re-PLANNING — each round's plan would embed the whole upstream tree
-  * again, doubling per round until Catalyst analysis dominates. Truncation
-  * materializes the frame and restarts lineage.
-  *
-  * `localCheckpoint()` (default) keeps blocks on executors — fast, but an
-  * executor loss makes the frame unrecomputable. On a real cluster set
-  * `spark.graft.checkpoint.reliable=true` (plus
-  * `sparkContext.setCheckpointDir` to a DFS path) to switch every
-  * truncation point to reliable `checkpoint()`: blocks land on the DFS and
-  * survive executor churn — the right trade at 100 TB, where a multi-round
-  * job outliving any single executor is the expectation, not the edge case.
-  */
-object Checkpoints {
-  val ReliableConf = "spark.graft.checkpoint.reliable"
-
-  /** Truncated frames pin executor blocks until their RDD is GC'd —
-    * invisible to the CacheManager, so [[Caches.releaseAll]] alone lets a
-    * full-inventory session (Bench, Verify) accumulate every gate's
-    * checkpoint blocks until GC pressure (guide §5). Track the backing
-    * RDDs here; [[releaseAll]] (called from [[Caches.releaseAll]]) frees
-    * them between gates. A released frame is gone for good (truncation
-    * cut its lineage), so release only runs at gate boundaries, after the
-    * last consumer. */
-  private val pinned =
-    scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-
-  def truncate(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val reliable =
-      spark.conf.getOption(ReliableConf).exists(_.trim.equalsIgnoreCase("true"))
-    if (reliable) {
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        s"$ReliableConf=true requires sparkContext.setCheckpointDir(<dfs path>)")
-      df.checkpoint()
-    } else {
-      val cp = df.localCheckpoint()
-      cp.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          synchronized { pinned += lr.rdd }
-        case _ =>
-      }
-      cp
-    }
-  }
-
-  /** Release ONE truncated frame whose last consumer already ran — what
-    * iterative loops need: round k+1's frame is materialized eagerly, so
-    * round k's blocks are dead the moment it exists, and a 100 TB
-    * multi-round job must not pin every round's vector until the gate
-    * boundary. No-op for frames this registry does not back. */
-  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      synchronized {
-        val i = pinned.indexWhere(_ eq lr.rdd)
-        if (i >= 0) { pinned.remove(i); lr.rdd.unpersist(blocking = false) }
-      }
-    case _ =>
-  }
-
-  def releaseAll(): Unit = synchronized {
-    pinned.foreach(_.unpersist(blocking = false))
-    pinned.clear()
-  }
-}

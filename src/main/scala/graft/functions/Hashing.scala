@@ -47,10 +47,10 @@ object Fnv {
 /** 64-bit SimHash over whitespace tokens of a string column — a native
   * Catalyst expression (single pass per row, no UDF serialization).
   * CodegenFallback: the hash is not on a codegen-critical path (it feeds a
-  * shuffle for banding), and profiling (`tools/ProfileSig`, sf0.1) puts the
-  * whole signature pass at ~0.3 s of the ~2.8 s simhash pipeline — the
-  * candidate join + verify stages dominate, so a `doGenCode` upgrade has
-  * no leverage here.
+  * shuffle for banding), and profiling (`tools/ProfileSig`, last at
+  * commit 68d271a; sf0.1) puts the whole signature pass at ~0.3 s of the
+  * ~2.8 s simhash pipeline — the candidate join + verify stages dominate,
+  * so a `doGenCode` upgrade has no leverage here.
   *
   * Algorithm: per token t, h = fnv1a64(t); for each bit b, accumulate +1 if
   * set else -1; the signature has bit b set iff the accumulator is > 0.
@@ -103,9 +103,9 @@ case class SimHash64(child: Expression) extends UnaryExpression
   * floods banded joins with false candidates — measured 3.3M candidate
   * pairs at hamming ≤ 15 on the sf0.1 corpus) but few word 3-grams
   * (453 candidates, same cutoff, same banding — `tools/
-  * ShingleSimhashProbe`), while near-duplicates share most shingles and
-  * stay within a small hamming radius (true-pair max 12 vs 13
-  * token-level). Empty input → null, like [[MinHashSig]].
+  * ShingleSimhashProbe`, last at commit 68d271a), while near-duplicates
+  * share most shingles and stay within a small hamming radius (true-pair
+  * max 12 vs 13 token-level). Empty input → null, like [[MinHashSig]].
   */
 case class SimHashOfHashes(child: Expression) extends UnaryExpression
     with CodegenFallback {

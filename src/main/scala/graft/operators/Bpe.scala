@@ -214,7 +214,7 @@ object Bpe {
         v = v.withColumn("rep", mergeOnce(col("rep"), a, b))
           .transform(graft.core.Checkpoints.truncate)
         // Merge k's vocabulary is dead once merge k+1's is materialized.
-        graft.core.Checkpoints.release(prev)
+        graft.core.Caches.release(prev)
         i += 1
       }
     }

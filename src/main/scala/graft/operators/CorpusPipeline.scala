@@ -734,10 +734,11 @@ object CorpusPipeline {
   // The semantic stage's k is NOT a constant: it follows the
   // [[SemanticStore.autoK]] policy (k = |training pool| / target
   // cluster size), computed from whatever embedding pool the build is
-  // handed — the production default the SemanticProbe argued for (a
-  // fixed k lets clusters, and the quadratic within-cluster search,
-  // grow linearly with the corpus; k ∝ N holds per-cluster work
-  // constant). Both entry points and every gate oracle replay the
+  // handed — the production default SCALEPROBE.md's "Round 10:
+  // semantic dedup (d13)" section argued for (`tools/SemanticProbe`,
+  // last at commit 68d271a; a fixed k lets clusters, and the quadratic
+  // within-cluster search, grow linearly with the corpus; k ∝ N holds
+  // per-cluster work constant). Both entry points and every gate oracle replay the
   // policy from COUNT(*), so there is no hand-tuned k to drift.
   val SemIters = 3
   val SemTau = 0.45

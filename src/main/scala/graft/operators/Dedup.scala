@@ -224,12 +224,13 @@ object Dedup {
     * 2. **Prefix-filtered inverted index** (AllPairs/PPJoin family) over
     *    the representatives: shingles are globally ordered by (document
     *    frequency, shingle) and only each document's prefix —
-    *    `|d| - floor(t·|d|) + 1` rarest shingles — is indexed. Any pair
-    *    with J ≥ t must share a prefix shingle (if all common elements sat
-    *    in A's suffix of length < t·|A| ≤ |A∩B|, that's a contradiction),
-    *    so the candidate set is exact while the join avoids the Σ df²
-    *    blowup on hot shingles. floor (not ceil) absorbs float error on
-    *    t·|d|, only ever lengthening the prefix.
+    *    `|d| - ⌈t·|d|⌉ + 1` rarest shingles — is indexed. Any pair with
+    *    J ≥ t must share a prefix shingle (if all common elements sat in
+    *    A's suffix of length ⌈t·|A|⌉ − 1 < |A∩B|, that's a
+    *    contradiction), so the candidate set is exact while the join
+    *    avoids the Σ df² blowup on hot shingles. The ceiling is taken
+    *    conservatively ([[rarestPrefix]]), so float error on t·|d| only
+    *    ever lengthens the prefix.
     *
     * Representative pairs are then expanded back through cluster
     * membership (cross pairs inherit the representatives' jaccard;
@@ -289,8 +290,13 @@ object Dedup {
 
   /** The persisted `(doc_id, shingle)` prefix filter shared by
     * [[jaccardPairs]] and [[containmentPairs]]: each document's
-    * `n_sh − ⌊t·n_sh⌋ + 1` globally-rarest shingles over [[exploded]]
+    * `n_sh − ⌈t·n_sh⌉ + 1` globally-rarest shingles over [[exploded]]
     * rows (shingle document frequency ascending, ties on the shingle).
+    * A threshold-t overlap with an `n_sh`-shingle set shares at least
+    * ⌈t·n_sh⌉ shingles, so one of them lies in this prefix. The ceiling
+    * is taken of `t·n_sh − 1e-9`: in doubles `0.07 * 100` is
+    * `7.000000000000001`, and a plain ceiling would drop a shingle the
+    * verification (which accepts 7/100 ≥ 0.07) still needs.
     * The bound varies per row, so this is an explicit window, not a
     * fixed-k [[graft.core.TopK]]. Persisted (Caches-registered): the
     * candidate self-join would otherwise recompute the whole
@@ -305,7 +311,7 @@ object Dedup {
     Caches.persist(ex.join(docFreq, "shingle")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <=
-        col("n_sh") - floor(lit(threshold) * col("n_sh")) + 1)
+        col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
       .select(col("doc_id"), col("shingle")))
   }
 
@@ -748,8 +754,9 @@ object Dedup {
     * derives from exactly the set jaccard compares, so identical shingle
     * sets ⇒ hamming 0 by construction. With verification exact and the
     * corpus's qualifying pairs inside the probe radius (measured max
-    * hamming 12 — `tools/ShingleSimhashProbe`), the output equals
-    * [[jaccardPairs]], which is the driver oracle for d04.
+    * hamming 12 — `tools/ShingleSimhashProbe`, last at commit
+    * 68d271a), the output equals [[jaccardPairs]], which is the driver
+    * oracle for d04.
     *
     * Like [[jaccardPairs]], exact-duplicate clusters (identical shingle
     * sets) are collapsed to one representative before banding — identical
@@ -996,7 +1003,7 @@ object Dedup {
     bloomMembership(history, batch, idCol, textCol, m, k)
   }
 
-  private[graft] def bandedSimhashCandidates(sig: DataFrame): DataFrame = {
+  private def bandedSimhashCandidates(sig: DataFrame): DataFrame = {
     val bandCols = (0 until 8).map { b =>
       struct(lit(b).as("band"),
         shiftright(col("sig"), b * 8).bitwiseAND(lit(0xffL)).as("bucket"))

@@ -105,9 +105,9 @@ object DedupQueries extends QueryPack {
 
     // SimHash banding + 1-bit multiprobe guarantees candidates to hamming
     // 15; the corpus's qualifying pairs top out at hamming 12 on the
-    // shingle-set signature (tools/ShingleSimhashProbe), and
-    // verification makes precision exact — so
-    // the emitted pair set equals the brute-force jaccard oracle. The
+    // shingle-set signature (tools/ShingleSimhashProbe, last at commit
+    // 68d271a), and verification makes precision exact — so the emitted
+    // pair set equals the brute-force jaccard oracle. The
     // hamming column itself is signature-internal (not SQL-expressible),
     // so the gate projects it away; ExtensionSpec pins the full output.
     Q("d04_simhash_pairs",

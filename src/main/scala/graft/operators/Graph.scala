@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.Checkpoints
+import graft.core.{Caches, Checkpoints}
 
 /** Link-graph analytics over a crawled corpus — the crawl-side ranking
   * signals (CommonCrawl publishes exactly these: PageRank/harmonic
@@ -136,7 +136,7 @@ object Graph {
       // Round k+1 is materialized (truncate is eager), so round k's
       // checkpoint blocks are dead — free them now rather than pinning
       // every round's vector until the gate boundary (guide §5).
-      Checkpoints.release(prev)
+      Caches.release(prev)
     }
     r.select(col("id"), col("r"))
   }
@@ -186,7 +186,7 @@ object Graph {
                 .otherwise(lit(0.0)) +
               lit(0.85) * coalesce(col("s").cast("double"), lit(0.0)),
               12).as("r")))
-      Checkpoints.release(prev)
+      Caches.release(prev)
     }
     r.select(col("id"), round(col("r"), 6).as("trustrank"))
   }
@@ -239,12 +239,12 @@ object Graph {
       a = normalized(aRaw, "dst", "a")
       // The prior round's vectors are dead once their successors are
       // materialized (truncate is eager) — free their blocks per round.
-      if (aPrev != null) Checkpoints.release(aPrev)
+      if (aPrev != null) Caches.release(aPrev)
       val hRaw = edges.join(a.withColumnRenamed("id", "dst"), "dst")
         .select(col("src"), col("a").cast("decimal(28,12)").as("c"))
         .groupBy(col("src")).agg(sum(col("c")).as("s"))
       h = normalized(hRaw, "src", "h")
-      Checkpoints.release(hPrev)
+      Caches.release(hPrev)
     }
     h.join(a, Seq("id"))
       .select(col("id"), round(col("h"), 6).as("hub"),
@@ -307,7 +307,7 @@ object Graph {
         .limit(1).isEmpty
       // The convergence check was this round's last read of the prior
       // labels — free their checkpoint blocks before the next round.
-      Checkpoints.release(labels)
+      Caches.release(labels)
       labels = next
       iter += 1
     }
@@ -392,7 +392,7 @@ object Graph {
               .as("label")))
       // Dead once the successor is materialized (round 1's prev is the
       // caller's start frame — a plain projection, release no-ops).
-      Checkpoints.release(prev)
+      Caches.release(prev)
     }
     labels.select(col("id"), col("label").as("community"))
   }

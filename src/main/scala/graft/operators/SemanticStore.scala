@@ -58,9 +58,10 @@ object SemanticStore {
 
   /** The auto-k policy's target mean cluster size: SemDeDup's knob is
     * really per-cluster work (the search is O(Σ|c|²)), so k grows with
-    * the corpus to hold E[|c|] at this constant — the `SemanticProbe`
-    * result that k ∝ N keeps 10×-data growth sub-linear, made the
-    * default instead of a per-call guess. */
+    * the corpus to hold E[|c|] at this constant — the result that
+    * k ∝ N keeps 10×-data growth sub-linear (SCALEPROBE.md, "Round 10:
+    * semantic dedup (d13)"; `tools/SemanticProbe`, last at commit
+    * 68d271a), made the default instead of a per-call guess. */
   val TargetClusterSize = 50L
 
   /** k from corpus size: `max(1, n / TargetClusterSize)` — mean cluster

@@ -617,8 +617,9 @@ object Similarity {
     * from the corpus via [[autoNlist]] — at a FIXED nlist the candidate
     * volume Σ_b |b|·probes grows O(N²/nlist) (measured 6.9× wall at 10×
     * data in SCALEPROBE r14), while nlist ∝ N holds E[|bucket|]
-    * constant and returns growth to ~linear (the KnnGraphProbe
-    * measurement). Pass `Some(nlist)` only to pin a bucket count. */
+    * constant and returns growth to ~linear (SCALEPROBE.md, "Round 15:
+    * knnGraph's DEFAULT path"; `tools.ScaleProbe <dir> <K> knn`
+    * re-measures it). Pass `Some(nlist)` only to pin a bucket count. */
   def knnGraph(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       nlist: Option[Int] = None, nprobe: Int = 4): DataFrame = {
     val scored = knnGraphScored(emb, idCol, vecCol, nlist, nprobe)

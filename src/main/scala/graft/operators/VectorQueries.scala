@@ -848,7 +848,8 @@ object VectorQueries extends QueryPack {
     // the codebook and the oracle replays the policy in SQL
     // (GREATEST(1, COUNT(*)//50) as the codebook LIMIT), so the gate
     // stays exact at every SF while candidate volume stays ~linear in
-    // the corpus (the KnnGraphProbe measurement behind SCALEPROBE).
+    // the corpus (SCALEPROBE.md, "Round 15: knnGraph's DEFAULT path";
+    // `tools.ScaleProbe <dir> <K> knn` re-measures it).
     Q("v24_knn_graph_auto",
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings")

@@ -98,10 +98,8 @@ object EventsStream {
     * sizing AQE would pick for the equivalent batch exchange: a tiny
     * feed runs 1 partition, a 100 TB log fans out to
     * bytes/advisory-size partitions with NO upper cap — nothing here is
-    * tuned to the local core count. `SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`
-    * pins it explicitly on clusters (e.g. to match a Kafka topic's
-    * partitioning). Restored after the query completes so batch gates
-    * keep the session default.
+    * tuned to the local core count. Restored after the query completes
+    * so batch gates keep the session default.
     *
     * The count is fixed when a query STARTS (the stream clones the
     * session conf then), so `body` must start the stream — every
@@ -113,17 +111,12 @@ object EventsStream {
       (body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
-    val n = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse {
-        val p = new org.apache.hadoop.fs.Path(feedDir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bytes = fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-        val advisory = spark.sessionState.conf.getConf(
-          org.apache.spark.sql.internal.SQLConf
-            .ADVISORY_PARTITION_SIZE_IN_BYTES)
-        math.max(1L, (bytes + advisory - 1) / advisory).toInt
-      }
+    val p = new org.apache.hadoop.fs.Path(feedDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bytes = fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
+    val advisory = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val n = math.max(1L, (bytes + advisory - 1) / advisory).toInt
     spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prior)
   }
@@ -199,7 +192,8 @@ object EventsStream {
     * foreachBatch at-least-once window (crash after the sink write,
     * before the checkpoint commit; the batch replays on restart) safe.
     * Factored out so the recovery spec can drive exactly that window
-    * (and so MartTriggerProbe can time exactly this merge per trigger). */
+    * (and so a per-trigger profile times exactly this merge: SCALEPROBE.md,
+    * "Round 10: st04 per-trigger profile"). */
   private[graft] def mergeHourly(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
     val updated = batch.withColumn("day", to_date(col("hour")))
@@ -208,8 +202,10 @@ object EventsStream {
     // Naming the touched day DIRECTORIES makes the merge read O(touched
     // days): reading the mart ROOT instead — even filtered or semi-joined
     // on `day` — lists and plans over every partition ever written, an
-    // O(mart-age) term per trigger that MartTriggerProbe measured growing
-    // (7.8 s for an EMPTY trigger against a 362-day mart).
+    // O(mart-age) term per trigger that SCALEPROBE.md's "Round 10: st04
+    // per-trigger profile" measured growing (7.8 s for an EMPTY trigger
+    // against a 362-day mart; `tools/MartTriggerProbe`, last at commit
+    // 68d271a).
     // Collected as yyyy-MM-dd STRINGS (the partition-dir spelling):
     // decoding DateType rows on the streaming microbatch thread trips a
     // MethodHandles lookup in Spark's date deserializer.
@@ -242,7 +238,7 @@ object EventsStream {
       .partitionBy("day").parquet(path)
     // Dead after the write — free per trigger, or an always-on stream
     // accumulates one pinned frame per micro-batch.
-    graft.core.Checkpoints.release(merged)
+    graft.core.Caches.release(merged)
   }
 
   /** Streaming keyed upsert (`foreachBatch` MERGE) — the CDC-into-
@@ -296,7 +292,7 @@ object EventsStream {
       .transform(graft.core.Checkpoints.truncate)
     merged.write.mode("overwrite").parquet(path)
     // Dead after the write — free per trigger (bounded-registry rule).
-    graft.core.Checkpoints.release(merged)
+    graft.core.Caches.release(merged)
   }
 
   /** Stream-stream interval join — attribution (each click joined to the

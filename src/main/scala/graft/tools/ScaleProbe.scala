@@ -8,7 +8,8 @@ import graft.operators.{Dedup, Similarity}
   * a planted near-duplicate cluster) and time the dedup/similarity
   * operators — checks the candidate-generation stages grow ~linearly with
   * corpus size rather than quadratically. Run manually:
-  * `runMain graft.tools.ScaleProbe <sfDir> <K>`.
+  * `runMain graft.tools.ScaleProbe <sfDir> <K> [label substring]`, e.g.
+  * `… 10 knn` for the k-NN graph candidate counts alone.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -98,6 +99,17 @@ object ScaleProbe {
     t(s"near-dup pairs x$k")(
       println("  pairs=" + Similarity
         .nearDupPairs(emb, "vec_id", "embedding", 0.45).count()))
+    // k-NN graph at v23's shape (nlist pinned to 16) and v24's (the
+    // autoNlist policy). Candidates = Σ_b |b|·probes(b), the volume the
+    // bucket policy controls: at fixed nlist it grows with the square of
+    // the data, under autoNlist linearly.
+    for ((shape, nlist) <- Seq("nlist=16" -> Some(16), "auto" -> None))
+      t(s"knn graph $shape x$k")(
+        println("  edges=" + Similarity
+          .knnGraph(emb, "vec_id", "embedding", k = 3, nlist, nprobe = 4)
+          .count() + " candidates=" + Similarity
+          .knnGraphScored(emb, "vec_id", "embedding", nlist, nprobe = 4)
+          .count()))
     spark.stop()
   }
 }

@@ -117,7 +117,7 @@ class ExtensionSpec extends SparkSuite {
     assert(exact.nonEmpty, "testdata should contain planted near-dups")
     // Verification ⇒ precision 1; 1-bit multiprobe over 8×8 banding ⇒
     // recall 1 through hamming 15 (corpus max on the shingle-set
-    // signature is 12, tools/ShingleSimhashProbe).
+    // signature is 12, tools/ShingleSimhashProbe at commit 68d271a).
     assert(sim == exact)
   }
 
