@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.CacheBridge
 import org.apache.spark.storage.StorageLevel
 
 /** The one registry of frames that pin executor blocks for a gate's
@@ -30,6 +31,12 @@ import org.apache.spark.storage.StorageLevel
   * releasing one caller's handle never drops data another caller still
   * reads. A truncated frame is gone for good once released (truncation
   * cut its lineage), so release it only after its last consumer ran.
+  *
+  * A persisted entry's plan is built with AQE free to change its output
+  * partitioning ([[CacheBridge]]), on a clone of the frame's session, so
+  * a pin over a shuffle holds as many partitions as its bytes need, not
+  * all of `spark.sql.shuffle.partitions`, and the stages that scan it
+  * run that many tasks. The shared session's conf is not written.
   */
 object Caches {
   private final class Entry(val plan: LogicalPlan, val cached: DataFrame) {
@@ -45,8 +52,10 @@ object Caches {
         case Some(e) =>
           e.handles += df
           // Re-pin an entry something outside the registry unpersisted.
-          if (df.storageLevel == StorageLevel.NONE) df.persist()
-        case None => entries += new Entry(plan, df.persist())
+          if (df.storageLevel == StorageLevel.NONE) CacheBridge.persist(df)
+        case None =>
+          CacheBridge.persist(df)
+          entries += new Entry(plan, df)
       }
     }
     df

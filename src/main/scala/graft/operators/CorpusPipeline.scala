@@ -993,13 +993,35 @@ object CorpusPipeline {
     *    benchmark), so no text is ever re-read here either.
     *
     * The overlap is [[delete]]'s, with the semantic repair added to the
-    * second branch: the repaired stage-3 set comes from the pinned
-    * pre-delete snapshot minus the family, so the store rewrites
-    * (`doc_shingles`, `minhash_buckets`, `dup_pairs`, `doc_meta`) run
-    * concurrently with the repair → stage-5 set → re-pack chain, which
-    * reads only truncated frames, the embedding input, `sem_codebook`,
-    * `sem_vectors`, `shards` and `pack_fences`, and writes only the last
-    * three. Neither branch reads a table the other writes.
+    * second branch, in four steps:
+    *
+    *  1. the family truncate, and beside it the reads that do not need
+    *     the family (per-batch stats, the pre-delete packed set and the
+    *     frozen codebook); the family count and the repaired stage-3 set
+    *     (the pinned pre-delete snapshot minus the family) follow the
+    *     family;
+    *  2. the store rewrites (`doc_shingles`, `minhash_buckets`,
+    *     `dup_pairs`, `doc_meta`) run concurrently with steps 3–4;
+    *  3. the repair's plan ([[SemanticStore.planRepair]]: its collects
+    *     and the truncated rewrite rows), then the stage-5 set truncated
+    *     from the verdicts the plan will leave
+    *     ([[SemanticStore.keepsAfter]]) before anything is written;
+    *  4. the repair's commit (`sem_vectors` only) concurrently with the
+    *     epoch-scoped re-pack, which reads only truncated frames,
+    *     `shards` and `pack_fences`, and writes only the last two.
+    *
+    * No two concurrent branches share a table one of them writes: the
+    * store rewrites touch only the four dedup/meta tables; the repair
+    * reads `sem_vectors`, the embedding input and truncated frames, and
+    * writes only `sem_vectors`, after its last read of it (the stage-5
+    * truncate); the re-pack touches only `shards` and `pack_fences`.
+    *
+    * Executions on the critical path: the family truncate; the stage-3
+    * truncate; the repair's insert-cell collect and rewrite truncate; the stage-5
+    * truncate; then the longer of the repair's write and the re-pack
+    * (four concurrent collects, the pack's truncate and collect, the
+    * write and any partition drops). 27 in all, as when the repair
+    * committed before the re-pack began.
     *
     * Post-delete the whole seven-table state is indistinguishable from
     * a build over the corpus minus the family under the same frozen
@@ -1010,26 +1032,35 @@ object CorpusPipeline {
       emb: DataFrame, vecIdCol: String, vecCol: String)
       : (Long, Seq[String], Seq[String]) = {
     val meta = spark.table(st.base.metaRel)
-    val family = takedownFamily(meta, victims)
-    // The family count and the pre-delete snapshots, concurrently as in
+    // The family and the pre-delete snapshots, concurrently as in
     // [[delete]]: per-batch stats, the PACKED set under the pre-delete
     // verdicts (to compute the changed-document frame — in the full
     // recipe changes are NOT monotone: a resurrected predecessor can
     // DROP its semantic successors, so the symmetric difference, not
-    // just resurrections, scopes the re-pack), and the repaired stage-3
+    // just resurrections, scopes the re-pack), the repaired stage-3
     // survivors with their persisted contaminated flags (fingerprints
-    // and the pair graph, never text).
+    // and the pair graph, never text) and the codebook the repair
+    // assigns resurrections against. Only the family count and the
+    // stage-3 set wait for the family.
+    var family: DataFrame = null
     var nFamily = 0L
     var batchStats: Seq[(String, Int, Long)] = null
     var survOld: DataFrame = null
     var surv3: DataFrame = null
-    val (metaLeft, pairsLeft) = withoutFamily(spark, st.base, meta, family)
+    var codebook: SemanticStore.Codebook = null
     graft.core.Par.run(
-      () => nFamily = family.count(),
+      () => {
+        family = takedownFamily(meta, victims)
+        val (metaLeft, pairsLeft) =
+          withoutFamily(spark, st.base, meta, family)
+        graft.core.Par.run(
+          () => nFamily = family.count(),
+          () => surv3 = Checkpoints.truncate(
+            packedSet(metaLeft, pairsLeft, "contaminated")))
+      },
       () => batchStats = preDeleteBatchStats(spark, meta),
       () => survOld = Checkpoints.truncate(packedFullSet(spark, st, meta)),
-      () => surv3 = Checkpoints.truncate(
-        packedSet(metaLeft, pairsLeft, "contaminated")))
+      () => codebook = SemanticStore.loadCodebook(spark, st.sem))
     if (nFamily == 0) return (0L, Nil, Nil)
     var repacked: (Seq[String], Seq[String]) = null
     graft.core.Par.run(
@@ -1045,12 +1076,18 @@ object CorpusPipeline {
             emb(vecIdCol) === col("__rid"))
           .select(col(vecIdCol).as("vid"), col(vecCol).as("vec"),
             col("batch_id"))
-        SemanticStore.repair(spark, st.sem, family, "doc_id", Some(insRows))
-        // Epoch-scoped re-pack (the [[repackChanged]] bound: epochs with
-        // no changed documents keep their shard partials byte-for-byte).
-        val surv5 = Checkpoints.truncate(cleanSet(spark, st, surv3))
-        repacked = repackChanged(spark, st.base, batchStats, surv5,
-          changedDocs(family, survOld, surv5))
+        val repair = SemanticStore.planRepair(spark, st.sem, family,
+          "doc_id", Some(insRows), codebook)
+        // The stage-5 set needs only the repair's verdicts, so it is
+        // pinned from the plan before the commit writes; the re-pack
+        // then runs beside the commit (epoch-scoped: epochs with no
+        // changed documents keep their shard partials byte-for-byte).
+        val surv5 = Checkpoints.truncate(cleanSet(
+          SemanticStore.keepsAfter(spark, st.sem, repair), surv3))
+        graft.core.Par.run(
+          () => SemanticStore.commitRepair(spark, st.sem, repair),
+          () => repacked = repackChanged(spark, st.base, batchStats, surv5,
+            changedDocs(family, survOld, surv5)))
       })
     (nFamily, repacked._1, repacked._2)
   }
@@ -1063,17 +1100,15 @@ object CorpusPipeline {
     * localCheckpoint when they need the before-state). */
   private[operators] def packedFullSet(spark: SparkSession, st: FullState,
       meta: DataFrame): DataFrame =
-    cleanSet(spark, st, packedSet(meta,
+    cleanSet(SemanticStore.keeps(spark, st.sem, "vid"), packedSet(meta,
       DedupStore.allPairs(spark, st.base.dedup), "contaminated"))
 
-  /** Stages 4–5 over persisted state: stage-3 rows (with their
-    * `contaminated` flag) minus the semantic store's current `keep =
-    * false` verdicts minus contaminated documents — `(doc_id, toks,
-    * batch_id, epoch)`. */
-  private def cleanSet(spark: SparkSession, st: FullState,
-      surv3: DataFrame): DataFrame = {
-    val semDropped = spark.table(st.sem.vectorsRel)
-      .filter(!col("keep")).select(col("vid"))
+  /** Stages 4–5: stage-3 rows (with their `contaminated` flag) minus the
+    * `keep = false` verdicts of `keeps` (`(vid, keep)` rows — the store's
+    * current ones, or those a planned repair will leave) minus
+    * contaminated documents — `(doc_id, toks, batch_id, epoch)`. */
+  private def cleanSet(keeps: DataFrame, surv3: DataFrame): DataFrame = {
+    val semDropped = keeps.filter(!col("keep")).select(col("vid"))
     surv3.join(semDropped, surv3("doc_id") === col("vid"), "left_anti")
       .filter(!col("contaminated"))
       .select(col("doc_id"), col("toks"), col("batch_id"), col("epoch"))

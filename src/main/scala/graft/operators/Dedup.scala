@@ -199,10 +199,13 @@ object Dedup {
     val sb = shB.select(col("doc_id").as("doc_b"), col("shingles").as("sb"))
     val inter = Hashing.sortedIntersectSize(col("sa"), col("sb"))
     val jac = inter / (size(col("sa")) + size(col("sb")) - inter)
+    // Size prefilter: jaccard ≥ t requires each side ≥ t·(the other).
+    // Slack as in [[rarestPrefix]], so it stays implied by the compare
+    // below: in doubles `0.07 * 100` is `7.000000000000001`.
     candidates
       .join(sa, "doc_a").join(sb, "doc_b")
-      .filter(size(col("sa")) >= lit(threshold) * size(col("sb")) &&
-        size(col("sb")) >= lit(threshold) * size(col("sa")))
+      .filter(size(col("sa")) >= lit(threshold) * size(col("sb")) - 1e-9 &&
+        size(col("sb")) >= lit(threshold) * size(col("sa")) - 1e-9)
       .withColumn("jaccard_raw", jac)
       .filter(col("jaccard_raw") >= threshold)
       .select(col("doc_a"), col("doc_b"),
@@ -443,8 +446,9 @@ object Dedup {
     val inter = Hashing.sortedIntersectSize(col("sa"), col("sb"))
     val repPairs = candidates
       .join(sa, "doc_a").join(sb, "doc_b")
-      // Size prefilter: containment ≥ t requires |B| ≥ t·|A|.
-      .filter(size(col("sb")) >= lit(threshold) * size(col("sa")))
+      // Size prefilter: containment ≥ t requires |B| ≥ t·|A| (with the
+      // slack of [[verifiedCross]]'s).
+      .filter(size(col("sb")) >= lit(threshold) * size(col("sa")) - 1e-9)
       .withColumn("containment_raw", inter / size(col("sa")))
       .filter(col("containment_raw") >= threshold)
       .select(col("doc_a"), col("doc_b"),

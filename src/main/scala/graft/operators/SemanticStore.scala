@@ -203,28 +203,48 @@ object SemanticStore {
     * indistinguishable from one that ingested the repaired survivor set
     * from the start.
     *
-    * Executions: the codebook read (centroids and tau together), at
-    * most two planning collects — the inserts' (cluster, batch) cells
-    * and the store's (cluster, batch) grid with per-cell row and victim
-    * counts; the grid overlaps the other two — then the truncated
-    * rewrite and its write. The affected clusters, the rewritten
-    * partitions and the emptied ones all derive from the two collects;
-    * nothing is collected off the rewrite. */
+    * Two halves, so a caller can start what needs only the repair's
+    * verdicts while the write runs: [[planRepair]] computes everything
+    * and writes nothing, [[commitRepair]] writes. This is plan then
+    * commit. Returns (rewritten, dropped) partition names. */
   private[operators] def repair(spark: SparkSession, store: SemanticStore,
       victims: DataFrame, idCol: String,
-      inserts: Option[DataFrame]): (Seq[String], Seq[String]) = {
+      inserts: Option[DataFrame]): (Seq[String], Seq[String]) =
+    commitRepair(spark, store, planRepair(spark, store, victims, idCol,
+      inserts, loadCodebook(spark, store)))
+
+  /** A computed, uncommitted [[repair]]: `rows` are the truncated
+    * `(cid, vid, v, nrm, keep, batch_id)` rows of every partition the
+    * commit rewrites (absent when it rewrites none), `parts` every
+    * partition the repair touches and `emptied` those of `parts` the
+    * commit drops. */
+  private[operators] final case class RepairPlan(rows: Option[DataFrame],
+      parts: Seq[String], emptied: Seq[String])
+
+  /** The planning half of [[repair]]. Executions: the codebook read
+    * (`codebook`, by name: [[loadCodebook]], or a value the caller read
+    * earlier), at most two planning collects — the inserts' (cluster,
+    * batch) cells and the store's (cluster, batch) grid with per-cell row
+    * and victim counts; the grid overlaps the other two — then the
+    * truncate of the rewrite rows. The affected clusters, the rewritten
+    * partitions and the emptied ones all derive from the two collects;
+    * nothing is collected off the rewrite. Reads `sem_codebook` and
+    * `sem_vectors`, writes nothing. */
+  private[operators] def planRepair(spark: SparkSession,
+      store: SemanticStore, victims: DataFrame, idCol: String,
+      inserts: Option[DataFrame], codebook0: => Codebook): RepairPlan = {
     val t = spark.table(store.vectorsRel)
     val vic = victims.select(col(idCol).as("vid"))
-    // The codebook read plus the insert-cell collect (the inserts are
+    // The codebook plus the insert-cell collect (the inserts are
     // assigned against that codebook) overlap the store-grid collect —
     // independent reads.
-    var codebook: (Array[(Array[Double], Double)], Double) = null
+    var codebook: Codebook = null
     var ins: Option[DataFrame] = None
     var insCells: Seq[(Int, String)] = Nil
     var grid: Seq[(Int, String, Long, Long)] = null
     graft.core.Par.run(
       () => {
-        codebook = loadCodebook(spark, store)
+        codebook = codebook0
         // Row-local assignment (inline-literal centroids), persisted:
         // the cell collect and the rewrite both consume it.
         ins = inserts.map(rows => Caches.persist(Similarity.assignClusters(
@@ -253,7 +273,7 @@ object SemanticStore {
     val threshold = codebook._2
     val cids = (grid.filter(_._4 > 0).map(_._1) ++ insCells.map(_._1))
       .distinct.sorted.toIndexedSeq
-    if (cids.isEmpty) return (Nil, Nil)
+    if (cids.isEmpty) return RepairPlan(None, Nil, Nil)
     val cidSet = cids.toSet
     val insParts = insCells.map(_._2).toSet
     val parts = (grid.filter(c => cidSet(c._1)).map(_._2) ++ insParts)
@@ -263,7 +283,7 @@ object SemanticStore {
     val remaining = grid.groupMapReduce(_._2)(c => c._3 - c._4)(_ + _)
     val emptied = parts.filter(p =>
       !insParts(p) && remaining.getOrElse(p, 0L) == 0L)
-    if (emptied.size < parts.size) {
+    val rows = Option.when(emptied.size < parts.size) {
       val kept0 = t.filter(col("cid").isin(cids: _*))
         .join(vic, Seq("vid"), "left_anti")
         .select(col("cid"), col("vid"), col("v"), col("nrm"),
@@ -290,21 +310,47 @@ object SemanticStore {
           col("batch_id"))
       // The overwrite replaces partitions this plan reads — truncate
       // lineage first (bounded by the affected clusters' spread).
-      mat.materializeIncremental(spark, store.vectorsRel,
-        repaired.union(untouched).transform(graft.core.Checkpoints.truncate),
-        Seq("batch_id"))
+      graft.core.Checkpoints.truncate(repaired.union(untouched))
     }
-    emptied.foreach(p =>
-      mat.dropPartition(spark, store.vectorsRel, "batch_id", p))
-    (parts, emptied)
+    RepairPlan(rows, parts, emptied)
   }
+
+  /** The commit half of [[repair]]: the dynamic overwrite of the
+    * rewritten partitions, then the drops of the emptied ones. Writes
+    * only `sem_vectors`, and reads only the plan's truncated rows.
+    * Returns (rewritten, dropped) partition names. */
+  private[operators] def commitRepair(spark: SparkSession,
+      store: SemanticStore, plan: RepairPlan): (Seq[String], Seq[String]) = {
+    plan.rows.foreach(r =>
+      mat.materializeIncremental(spark, store.vectorsRel, r, Seq("batch_id")))
+    plan.emptied.foreach(p =>
+      mat.dropPartition(spark, store.vectorsRel, "batch_id", p))
+    (plan.parts, plan.emptied)
+  }
+
+  /** `sem_vectors` as [[commitRepair]] will leave it, `(vid, keep)`: the
+    * plan's rows for the partitions it rewrites, the table's for every
+    * partition it does not touch, none for the ones it empties. Lazy over
+    * the table, so truncate what derives from it before the commit
+    * starts. */
+  private[operators] def keepsAfter(spark: SparkSession,
+      store: SemanticStore, plan: RepairPlan): DataFrame = {
+    val others = spark.table(store.vectorsRel)
+      .filter(!col("batch_id").cast("string").isin(plan.parts: _*))
+      .select(col("vid"), col("keep"))
+    plan.rows.fold(others)(r =>
+      others.unionAll(r.select(col("vid"), col("keep"))))
+  }
+
 
   /** The frozen codebook in cid order plus the store's persisted
     * similarity threshold — k rows, the one bounded collect an ingest or
     * a repair needs (centroids ride inline in the assignment
     * expression; tau rides in every codebook row, set at build). */
-  private def loadCodebook(spark: SparkSession, store: SemanticStore)
-      : (Array[(Array[Double], Double)], Double) = {
+  private[operators] type Codebook = (Array[(Array[Double], Double)], Double)
+
+  private[operators] def loadCodebook(spark: SparkSession,
+      store: SemanticStore): Codebook = {
     val rows = spark.table(store.codebookRel).orderBy(col("cid"))
       .select(col("cv"), col("cn"), col("tau")).collect()
     (rows.map(r => (r.getSeq[Double](0).toArray, r.getDouble(1))),

@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -9,7 +11,9 @@ import graft.SparkSuite
   * by plan, so two frames with one plan share one entry, and releasing
   * one handle must not drop the entry the other still reads. It is also
   * the registry of checkpoint-truncated frames: one `release` frees a
-  * frame whichever way it was pinned. */
+  * frame whichever way it was pinned. A persisted entry over a shuffle
+  * is sized by AQE, so the stages that build and scan it are no wider
+  * than the context, and the persist leaves the session conf alone. */
 class CachesSpec extends SparkSuite {
 
   private def frame(tag: Int) =
@@ -83,5 +87,44 @@ class CachesSpec extends SparkSuite {
     Caches.persist(frame(6))
     Caches.releaseAll()
     assert(!cached(a))
+  }
+
+  /** Task count of every stage `body` submits, read off the listener bus
+    * under a private job group. */
+  private def stageTasks(body: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    val group = s"caches-spec-${System.nanoTime}"
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val l = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          tasks.add(e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "CachesSpec")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(l)
+    tasks.asScala.toSeq
+  }
+
+  test("a persisted frame over a shuffle is built and read by stages no " +
+      "wider than the context, and the session conf is unchanged") {
+    val before = spark.conf.getAll
+    val p = Caches.persist(spark.range(0, 1000)
+      .groupBy((col("id") % 10).as("k")).agg(count(lit(1)).as("n")))
+    assert(spark.conf.getAll == before,
+      "persisting wrote the shared session's conf")
+    assert(cached(p))
+    val tasks = stageTasks(p.groupBy(col("n")).count().collect())
+    assert(tasks.nonEmpty)
+    assert(tasks.max <= spark.sparkContext.defaultParallelism,
+      s"stages over the pinned shuffle ran ${tasks.mkString("[", ", ", "]")} " +
+        "tasks: the cached plan kept every shuffle partition")
+    Caches.release(p)
+    assert(!cached(p))
   }
 }

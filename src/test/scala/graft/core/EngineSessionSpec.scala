@@ -45,4 +45,10 @@ class EngineSessionSpec extends SparkSuite {
       EngineSession.defaultShufflePartitions)
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
+
+  test("the generated-code cache holds more than one operation's classes") {
+    assert(spark.conf.get(EngineSession.CodegenCacheEntries) == "1000")
+    assert(spark.sparkContext.getConf.get(EngineSession.CodegenCacheEntries)
+      == "1000")
+  }
 }

@@ -182,20 +182,31 @@ class CorpusPipelineSpec extends SparkSuite {
     CorpusPipeline.reset(spark, st)
   }
 
-  /** Part-file names per partition directory of every state table — what
-    * a takedown that touches nothing leaves unchanged. */
-  private def stateFiles(st: CorpusPipeline.State): Map[String, Set[String]] = {
+  /** Part-file paths, relative to their table's location, of every
+    * state table — what a takedown that touches nothing leaves
+    * unchanged. */
+  private def stateFiles(rels: Seq[String]): Map[String, Set[String]] = {
     import org.apache.spark.sql.catalyst.TableIdentifier
-    Seq(st.metaRel, st.shardsRel, st.dedup.shinglesRel, st.dedup.bucketsRel,
-        st.dedup.pairsRel).flatMap { rel =>
+    def parts(dir: java.io.File, prefix: String): Seq[String] =
+      dir.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory) parts(f, s"$prefix${f.getName}/")
+        else if (f.getName.startsWith("part-")) Seq(prefix + f.getName)
+        else Nil
+      }
+    rels.filter(spark.catalog.tableExists).map { rel =>
       val Array(schema, name) = rel.split('.')
-      val loc = new java.io.File(new java.net.URI(spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(name, Some(schema))).location
-        .toString))
-      loc.listFiles().filter(_.isDirectory).map(d => s"$rel/${d.getName}" ->
-        d.listFiles().map(_.getName).filter(_.startsWith("part-")).toSet)
+      rel -> parts(new java.io.File(new java.net.URI(spark.sessionState
+        .catalog.getTableMetadata(TableIdentifier(name, Some(schema)))
+        .location.toString)), "").toSet
     }.toMap
   }
+
+  private def stateFiles(st: CorpusPipeline.State): Map[String, Set[String]] =
+    stateFiles(baseRels(st))
+
+  private def baseRels(st: CorpusPipeline.State): Seq[String] =
+    Seq(st.metaRel, st.shardsRel, st.fencesRel, st.dedup.shinglesRel,
+      st.dedup.bucketsRel, st.dedup.pairsRel)
 
   test("the snapshot-derived survivor set of a resurrecting takedown " +
       "equals the one read back from the rewritten tables") {
@@ -440,44 +451,66 @@ class CorpusPipelineSpec extends SparkSuite {
     CorpusPipeline.reset(spark, st)
   }
 
-  test("full-recipe delete: a resurrected doc re-enters the semantic " +
-      "stage and drops the successor it always would have") {
+  /** The resurrection fixture, text and embeddings (`doc_id`/`vec_id`
+    * 100–106). 100 near-dup-drops 101 (text), and 100's embedding is
+    * ORTHOGONAL to the rest; 101's embedding equals 102's (cos = 1 ≥
+    * tau). Under the autoK policy this tiny pool trains k = 1, so every
+    * vector shares the single cluster, and the only pair with cosine ≥
+    * tau is that EQUAL pair (every other vector is hot on a distinct
+    * dimension, cos = 0) — all the predecessor chain needs. 106 is alone
+    * in its batch. */
+  private def resurrection: (DataFrame, DataFrame) = {
     import spark.implicits._
-    // The chain p11's oracle covers in aggregate, pinned doc by doc:
-    //   100 near-dup-drops 101 (text);   100's embedding ORTHOGONAL
-    //   101's embedding ~ 102's (cos ~ 0.99 >= tau)
-    // Pre-delete: 101 never reaches the semantic stage, 102 keeps.
-    // Delete 100: 101 resurrects at stage 3, re-ingests into the frozen
-    // store MID-HISTORY, and as 102's predecessor drops it — the
-    // one-shot answer over the corpus minus the victim.
     def words(seed: Int, n: Int): String =
       (0 until n).map(i => s"alpha${seed}x$i").mkString(" ")
     val base = words(1, 60)
     val nearDup = words(1, 58) + " omega one two"
     val docs = Seq(
       (100L, base), (101L, nearDup), (102L, words(3, 55)),
-      (103L, words(5, 55)), (104L, words(7, 70)), (105L, words(9, 52)))
+      (103L, words(5, 55)), (104L, words(7, 70)), (105L, words(9, 52)),
+      (106L, words(11, 57)))
       .toDF("doc_id", "text")
     def e(hot: Int, soft: Int = -1): Seq[Float] =
       (0 until 8).map(d => if (d == hot) 1.0f
         else if (d == soft) 0.1f else 0.0f)
-    // 101 and 102 share one embedding: under the autoK policy this tiny
-    // pool trains k = 1, so ALL vectors share the single cluster — and
-    // the only pair with cosine >= tau is the EQUAL pair (every other
-    // vector is hot on a distinct dimension, cos = 0), which is all the
-    // predecessor chain needs (cos = 1 >= tau).
     val emb = Seq(
       (100L, e(0)), (101L, e(1, 2)), (102L, e(1, 2)),
-      (103L, e(4)), (104L, e(5)), (105L, e(6)))
+      (103L, e(4)), (104L, e(5)), (105L, e(6)), (106L, e(7)))
       .toDF("vec_id", "embedding")
-    val bench = Seq((9000L, words(99, 60))).toDF("doc_id", "text")
-    val st = CorpusPipeline.FullState("full_del_spec")
+    (docs, emb)
+  }
+
+  /** History 100–103, batch b1 = 104–105 and, with `withB2`, batch b2 =
+    * 106 alone. */
+  private def buildResurrection(st: CorpusPipeline.FullState,
+      withB2: Boolean): Unit = {
+    import spark.implicits._
+    val (docs, emb) = resurrection
+    val bench = Seq((9000L, (0 until 60).map(i => s"alpha99x$i")
+      .mkString(" "))).toDF("doc_id", "text")
     CorpusPipeline.buildHistoryFull(spark,
       docs.filter(col("doc_id") <= 103), emb.filter(col("vec_id") <= 103),
       bench, "doc_id", "text", "vec_id", "embedding", st)
     CorpusPipeline.appendBatchFull(spark,
-      docs.filter(col("doc_id") > 103), emb.filter(col("vec_id") > 103),
+      docs.filter(col("doc_id").between(104, 105)),
+      emb.filter(col("vec_id").between(104, 105)),
       "doc_id", "text", "vec_id", "embedding", st, "b1")
+    if (withB2) CorpusPipeline.appendBatchFull(spark,
+      docs.filter(col("doc_id") === 106), emb.filter(col("vec_id") === 106),
+      "doc_id", "text", "vec_id", "embedding", st, "b2")
+  }
+
+  test("full-recipe delete: a resurrected doc re-enters the semantic " +
+      "stage and drops the successor it always would have") {
+    import spark.implicits._
+    // The chain p11's oracle covers in aggregate, pinned doc by doc.
+    // Pre-delete: 101 never reaches the semantic stage, 102 keeps.
+    // Delete 100: 101 resurrects at stage 3, re-ingests into the frozen
+    // store MID-HISTORY, and as 102's predecessor drops it — the
+    // one-shot answer over the corpus minus the victim.
+    val (_, emb) = resurrection
+    val st = CorpusPipeline.FullState("full_del_spec")
+    buildResurrection(st, withB2 = false)
     def keeps() = SemanticStore.keeps(spark, st.sem, "vec_id")
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     val pre = keeps()
@@ -501,6 +534,66 @@ class CorpusPipelineSpec extends SparkSuite {
     assert(CorpusPipeline.deleteFull(spark, st, Seq(100L).toDF("doc_id"),
       emb, "vec_id", "embedding") == ((0L, Nil, Nil)))
     CorpusPipeline.resetFull(spark, st)
+  }
+
+  /** The seven tables a full-recipe takedown may rewrite. */
+  private def fullRels(st: CorpusPipeline.FullState): Seq[String] =
+    baseRels(st.base) :+ st.sem.vectorsRel
+
+  /** Every row of every table in `rels`, keyed by table name — two schemas' states compare equal iff their tables
+    * hold the same rows. */
+  private def tableRows(rels: Seq[String]): Map[String, Set[String]] =
+    rels.filter(spark.catalog.tableExists).map { rel =>
+      val t = spark.table(rel)
+      rel.split('.')(1) -> t.select(t.columns.sorted.map(col): _*)
+        .collect().map(_.toString).toSet
+    }.toMap
+
+  test("full-recipe delete: committing the semantic repair beside the " +
+      "re-pack leaves the seven tables as repair-then-re-pack does; a " +
+      "replay writes nothing") {
+    import spark.implicits._
+    val (_, emb) = resurrection
+    // Victims 100 (resurrects 101 into the base partition) and 106 (the
+    // only row of semantic partition b2, which the repair empties).
+    val victims = Seq(100L, 106L).toDF("doc_id")
+    val split = CorpusPipeline.FullState("full_split_spec")
+    val serial = CorpusPipeline.FullState("full_serial_spec")
+    buildResurrection(split, withB2 = true)
+    buildResurrection(serial, withB2 = true)
+    // Serial: the whole repair commits first (the family leaves and the
+    // resurrected 101 re-enters its original partition), then the
+    // takedown, whose repair plan finds nothing left to do, re-packs
+    // under the committed verdicts.
+    val meta = spark.table(serial.base.metaRel)
+    val family = CorpusPipeline.takedownFamily(meta, victims)
+    val (metaLeft, pairsLeft) =
+      CorpusPipeline.withoutFamily(spark, serial.base, meta, family)
+    val surv3 = CorpusPipeline.packedSet(metaLeft, pairsLeft)
+    val resurrected = surv3.join(
+      spark.table(serial.sem.vectorsRel).select(col("vid")),
+      col("doc_id") === col("vid"), "left_anti")
+    val inserts = emb.join(resurrected, emb("vec_id") === col("doc_id"))
+      .select(col("vec_id").as("vid"), col("embedding").as("vec"),
+        col("batch_id"))
+    assert(SemanticStore.repair(spark, serial.sem, family, "doc_id",
+      Some(inserts)) == ((Seq("b1", "b2", "base"), Seq("b2"))))
+    assert(CorpusPipeline.deleteFull(spark, serial, victims, emb, "vec_id",
+      "embedding")._1 == 2)
+    assert(CorpusPipeline.deleteFull(spark, split, victims, emb, "vec_id",
+      "embedding")._1 == 2)
+    val post = tableRows(fullRels(split))
+    assert(post == tableRows(fullRels(serial)))
+    assert(SemanticStore.keeps(spark, split.sem, "vec_id")
+      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap ==
+      Map(101L -> true, 102L -> false, 103L -> true, 104L -> true,
+        105L -> true))
+    // A replayed takedown finds no family and touches no file.
+    val before = stateFiles(fullRels(split))
+    assert(CorpusPipeline.deleteFull(spark, split, victims, emb, "vec_id",
+      "embedding") == ((0L, Nil, Nil)))
+    assert(stateFiles(fullRels(split)) == before)
+    Seq(split, serial).foreach(CorpusPipeline.resetFull(spark, _))
   }
 
   // ---- Full-recipe (p07/p08) contracts ------------------------------

@@ -37,13 +37,14 @@ class DedupPrefixSpec extends SparkSuite {
     Dedup.shingled(docs, "doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toSet)).toSeq
 
-  /** The verification's own arithmetic (doubles), applied to all pairs. */
+  /** The verification's own compare (doubles), applied to all pairs —
+    * no size prefilter, so an operator whose prefilter rejects a pair
+    * the compare accepts differs from it. */
   private def bruteJaccard(docs: DataFrame, t: Double): Set[(Long, Long)] = {
     val sh = shingleSets(docs)
     (for {
       (a, sa) <- sh; (b, sb) <- sh if a < b
       inter = (sa & sb).size
-      if sa.size >= t * sb.size && sb.size >= t * sa.size
       if inter.toDouble / (sa.size + sb.size - inter) >= t
     } yield (a, b)).toSet
   }
@@ -53,7 +54,6 @@ class DedupPrefixSpec extends SparkSuite {
     val sh = shingleSets(docs)
     (for {
       (a, sa) <- sh; (b, sb) <- sh if a != b
-      if sb.size >= t * sa.size
       if (sa & sb).size.toDouble / sa.size >= t
     } yield (a, b)).toSet
   }
@@ -95,6 +95,24 @@ class DedupPrefixSpec extends SparkSuite {
       assert(got.filter(col("doc_a") === 1L && col("doc_b") === 2L)
         .select("containment").as[Double].collect().toSeq == Seq(0.07))
       assert(pairs(got) == bruteContainment(docs, 0.07))
+    } finally graft.core.Caches.releaseAll()
+  }
+
+  test("a 7-shingle document inside a 100-shingle one is a jaccard and a " +
+      "two-way containment pair at t = 0.07 although 0.07 * 100 rounds " +
+      "up past 7 in doubles") {
+    // 102 words → 100 shingles; its first 9 words → 7 shingles, all
+    // inside the large document: jaccard 7/100, containment 7/100 one
+    // way and 1 the other.
+    val a = (0 until 102).map("a" + _)
+    val docs = Seq((1L, a.mkString(" ")), (2L, a.take(9).mkString(" ")))
+      .toDF("doc_id", "text")
+    try {
+      assert(shingleSets(docs).map(_._2.size).sorted == Seq(7, 100))
+      assert(pairs(Dedup.jaccardPairs(docs, "doc_id", "text", 0.07)) ==
+        Set((1L, 2L)))
+      assert(pairs(Dedup.containmentPairs(docs, "doc_id", "text", 0.07)) ==
+        Set((1L, 2L), (2L, 1L)))
     } finally graft.core.Caches.releaseAll()
   }
 }
