@@ -19,7 +19,7 @@ import graft.SparkSuite
   * added anywhere would silently become DYNAMIC under the sticky conf —
   * keeping stale partitions instead of truncating the table — so the
   * invariant is pinned structurally here: every `.insertInto(` call
-  * site in the main tree must live in Runner.scala (the two audited
+  * site in the main tree must live in Materializer.scala (the two audited
   * materializer paths), and the audited overwrite path must remain the
   * dynamic one. */
 class OverwriteInvariantSpec extends SparkSuite {
@@ -31,7 +31,7 @@ class OverwriteInvariantSpec extends SparkSuite {
   }
 
   test("every insertInto call site lives in the audited materializer " +
-      "(Runner.scala) — no un-audited writer can hit the sticky dynamic conf") {
+      "(Materializer.scala) — no un-audited writer can hit the sticky dynamic conf") {
     val offenders = mainSources.flatMap { p =>
       val text = Files.readString(p)
       // Strip line comments and scaladoc so prose mentions don't count.
@@ -40,7 +40,7 @@ class OverwriteInvariantSpec extends SparkSuite {
         .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("/*"))
         .mkString("\n")
       if (code.contains(".insertInto(") &&
-          !p.toString.endsWith("model/Runner.scala"))
+          !p.toString.endsWith("model/Materializer.scala"))
         Some(p.toString) else None
     }
     assert(offenders.isEmpty,
@@ -53,7 +53,7 @@ class OverwriteInvariantSpec extends SparkSuite {
 
   test("the audited overwrite insertInto is the dynamic-conf one") {
     val runner = Files.readString(
-      Paths.get("src/main/scala/graft/model/Runner.scala"))
+      Paths.get("src/main/scala/graft/model/Materializer.scala"))
     val overwriteSites = "\\.write\\.mode\\(\"overwrite\"\\)\\.insertInto\\("
       .r.findAllIn(runner).size
     assert(overwriteSites == 1,
