@@ -24,8 +24,11 @@ package graft.core
   * Callers must only pass thunks with NO mutual data dependency and no
   * shared mutable state beyond Spark's own thread-safe surfaces
   * (SparkSession, catalog, cache manager). Two thunks that first-touch
-  * the same registered cache ([[Caches.persist]]) are safe: the block
-  * store locks per partition and the loser reuses the winner's blocks.
+  * the same registered cache ([[Caches.persist]]) are safe, but they do
+  * not overlap: the block store locks per partition, so the second waits
+  * until the first has materialized the entry and then reuses its blocks.
+  * A caller that wants the two to overlap materializes the entry before
+  * forking.
   */
 object Par {
   def run(fs: (() => Unit)*): Unit = {

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.CatalogMaterializer
-
 /** Persisted, incrementally-maintained duplicate-BLOCK state — the
   * lifecycle twin of [[Dedup.blockDedup]] (d29), the same discipline
   * every other dedup tier has ([[DedupStore]] d10, [[SpanStore]] d21):
@@ -51,12 +49,10 @@ final case class BlockStore(schemaName: String) {
 
 object BlockStore {
 
-  private def mat = new CatalogMaterializer
-
   /** Drop all store tables — a fresh start for gates/specs. */
   def reset(spark: SparkSession, store: BlockStore): Unit =
     Seq(store.blocksRel, store.docsRel, store.occRel)
-      .foreach(mat.dropRelation(spark, _))
+      .foreach(BatchCommit.mat.dropRelation(spark, _))
 
   /** Build: dedup the base corpus one-shot (exactly [[Dedup
     * .blockDedup]]) and seed the fingerprint table with every distinct
@@ -79,15 +75,12 @@ object BlockStore {
   def append(spark: SparkSession, docs: DataFrame, idCol: String,
       textCol: String, blockWords: Int, store: BlockStore,
       batchId: String): Unit =
-    // "Prior" EXCLUDES this batch's own partition: on an at-least-once
-    // replay (crash after the store writes, before the offset commit)
-    // the crashed attempt's fingerprints are already in the table, and
-    // an unfiltered read would excise the entire replayed batch against
-    // ITSELF — every doc would come back empty. Partition-pruned by
-    // batch_id; StreamCrashReplaySpec kills exactly this seam.
+    // "Prior" is the replay read: an unfiltered read would excise a
+    // replayed batch against its own crashed attempt's fingerprints
+    // (StreamCrashReplaySpec kills exactly this seam).
     writeBatch(spark, docs, idCol, textCol, blockWords, store, batchId,
-      priorFps = Some(spark.table(store.blocksRel)
-        .filter(col("batch_id") =!= batchId).select(col("fp"))))
+      priorFps = Some(BatchCommit.without(spark, store.blocksRel, batchId)
+        .select(col("fp"))))
 
   /** The accumulated deduped corpus (every batch's output rows). */
   def deduped(spark: SparkSession, store: BlockStore): DataFrame =
@@ -202,10 +195,11 @@ object BlockStore {
       .join(repairIds, Seq("id"), "left_anti")
       .unionByName(newRows)
       .transform(graft.core.Checkpoints.truncate)
-    mat.materializeIncremental(spark, store.docsRel, updated,
-      Seq("batch_id"))
+    BatchCommit.replace(spark, store.docsRel, Some(updated), Nil)
   }
 
+  /** Land one batch in all three tables in one [[BatchCommit.write]]:
+    * the only store read, `priorFps`, is the pinned replay read. */
   private def writeBatch(spark: SparkSession, docs: DataFrame,
       idCol: String, textCol: String, blockWords: Int,
       store: BlockStore, batchId: String,
@@ -226,24 +220,23 @@ object BlockStore {
     // blocks are ALL already in history loses every row here, but its
     // true block count must still report (the st16-at-sf0.01 case —
     // a fully-dup doc landing in a later micro-batch than its source).
-    // Persisted: both partition writes below consume this frame, and
+    // Persisted: two partition writes below consume this frame, and
     // without the persist each re-runs the tokenize + anti-join scan
     // (the d25 lesson: find the redundant work before 10× does).
     val novel = graft.core.Caches.persist(priorFps match {
       case Some(fps) => blocks.join(fps, Seq("fp"), "left_anti")
       case None => blocks
     })
-    writePartition(spark, store.docsRel, batchId,
-      Dedup.blockRebuild(counted, Dedup.markCanonical(novel)))
-    // Every fp this batch INTRODUCED (kept or batch-locally excised) —
-    // novel is already prior-free, so distinct fps are the delta.
-    writePartition(spark, store.blocksRel, batchId,
-      novel.select(col("fp")).distinct())
-    // EVERY occurrence, pre-excision — [[delete]]'s repair needs the
-    // next owner of a block even when that occurrence was history-
-    // excised on arrival and never made the deduped output.
-    writePartition(spark, store.occRel, batchId,
-      blocks.select(col("id"), col("block_id"), col("fp"),
+    BatchCommit.write(spark, batchId,
+      store.docsRel ->
+        Dedup.blockRebuild(counted, Dedup.markCanonical(novel)),
+      // Every fp this batch INTRODUCED (kept or batch-locally excised) —
+      // novel is already prior-free, so distinct fps are the delta.
+      store.blocksRel -> novel.select(col("fp")).distinct(),
+      // EVERY occurrence, pre-excision — [[delete]]'s repair needs the
+      // next owner of a block even when that occurrence was history-
+      // excised on arrival and never made the deduped output.
+      store.occRel -> blocks.select(col("id"), col("block_id"), col("fp"),
         col("block_text")))
     // Both persists are fully consumed by the three writes above;
     // release them NOW rather than at the harness's releaseAll — a
@@ -252,12 +245,5 @@ object BlockStore {
     // of the stream.
     graft.core.Caches.release(novel)
     graft.core.Caches.release(blocks)
-  }
-
-  private def writePartition(spark: SparkSession, rel: String,
-      batchId: String, df: DataFrame): Unit = {
-    mat.dropPartition(spark, rel, "batch_id", batchId)
-    mat.materializeIncremental(spark, rel,
-      df.withColumn("batch_id", lit(batchId)), Seq("batch_id"))
   }
 }

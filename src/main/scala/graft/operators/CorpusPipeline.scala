@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Caches, Checkpoints}
 import graft.functions.{Hashing, TextFunctions}
-import graft.model.CatalogMaterializer
 
 /** The composed corpus pipeline — the end-to-end shape a pretraining
   * data build actually runs, stitched from the tiers this engine gates
@@ -72,8 +71,6 @@ object CorpusPipeline {
   val SeqLen = 2048
   val Threshold = 0.6
 
-  private def mat = new CatalogMaterializer
-
   final case class State(schemaName: String) {
     val metaRel = s"$schemaName.doc_meta"
     val shardsRel = s"$schemaName.shards"
@@ -105,7 +102,7 @@ object CorpusPipeline {
 
   /** Committed fences in epoch order; epoch 0 (offset 0) is implicit. */
   private def fenceRows(spark: SparkSession, st: State): Seq[(Int, Long)] =
-    if (!mat.relationExists(spark, st.fencesRel)) Nil
+    if (!BatchCommit.mat.relationExists(spark, st.fencesRel)) Nil
     else spark.table(st.fencesRel).orderBy(col("epoch"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toIndexedSeq
 
@@ -116,10 +113,10 @@ object CorpusPipeline {
   /** Tokens already packed in `epoch`, excluding a replayed batch. */
   private def epochTokens(spark: SparkSession, st: State, epoch: Int,
       exclude: Option[String]): Long =
-    if (!mat.relationExists(spark, st.shardsRel)) 0L
-    else spark.table(st.shardsRel)
-      .filter(col("epoch") === epoch &&
-        exclude.map(b => col("batch_id") =!= b).getOrElse(lit(true)))
+    if (!BatchCommit.mat.relationExists(spark, st.shardsRel)) 0L
+    else exclude.fold(spark.table(st.shardsRel))(
+        BatchCommit.without(spark, st.shardsRel, _))
+      .filter(col("epoch") === epoch)
       .agg(coalesce(sum(col("pack_tokens")), lit(0L))).head.getLong(0)
 
   /** Declare an epoch fence after the batches appended so far: the next
@@ -144,7 +141,7 @@ object CorpusPipeline {
     val cursor = off + epochTokens(spark, st, e, exclude = None)
     val next = ((cursor + SeqLen - 1) / SeqLen) * SeqLen
     import spark.implicits._
-    mat.materializeTable(spark, st.fencesRel,
+    BatchCommit.mat.materializeTable(spark, st.fencesRel,
       (fenceRows(spark, st) :+ ((e + 1, next)))
         .toDF("epoch", "fence_offset"))
     next
@@ -281,7 +278,7 @@ object CorpusPipeline {
   def reset(spark: SparkSession, st: State): Unit = {
     DedupStore.reset(spark, st.dedup)
     Seq(st.metaRel, st.shardsRel, st.fencesRel)
-      .foreach(mat.dropRelation(spark, _))
+      .foreach(BatchCommit.mat.dropRelation(spark, _))
   }
 
   /** INCREMENTAL bootstrap: run the one-shot stages over the historical
@@ -343,8 +340,7 @@ object CorpusPipeline {
     * the spec can audit the plan. */
   private[operators] def exactFresh(spark: SparkSession, q: DataFrame,
       idCol: String, st: State, batchId: String): DataFrame = {
-    val histFp = spark.table(st.metaRel)
-      .filter(col("batch_id") =!= batchId)
+    val histFp = BatchCommit.without(spark, st.metaRel, batchId)
       .select(col("fingerprint"))
     val fresh = q.join(histFp, Seq("fingerprint"), "left_anti")
     fingerprintWinners(fresh, idCol)
@@ -381,21 +377,13 @@ object CorpusPipeline {
       epoch: Int, meta: DataFrame, shardPartial: DataFrame): Unit = {
     // Both tables carry the batch's epoch: meta is the batch→epoch map
     // a takedown scopes its re-pack with, shards feed the per-epoch
-    // offset aggregate.
-    def tag(df: DataFrame) = df.withColumn("batch_id", lit(batchId))
-      .withColumn("epoch", lit(epoch))
-    // meta and shards are independent relations and neither plan reads
-    // the other (meta derives from the quality frame, the shard partial
-    // from the survivor packing; the offset scalar the partial embeds
-    // was collected BEFORE this call) — write them concurrently
-    // (guide §2.6).
-    graft.core.Par.run(
-      Seq(st.metaRel -> meta, st.shardsRel -> shardPartial).map {
-        case (rel, df) => () => {
-          mat.dropPartition(spark, rel, "batch_id", batchId)
-          mat.materializeIncremental(spark, rel, tag(df), Seq("batch_id"))
-        }
-      }: _*)
+    // offset aggregate. Neither plan reads the other table (meta derives
+    // from the quality frame, the shard partial from the survivor
+    // packing; the offset scalar the partial embeds was collected BEFORE
+    // this call), so both commit in one write.
+    def tag(df: DataFrame) = df.withColumn("epoch", lit(epoch))
+    BatchCommit.write(spark, batchId, st.metaRel -> tag(meta),
+      st.shardsRel -> tag(shardPartial))
   }
 
   /** Cascading TAKEDOWN — the one "forget this document everywhere" verb
@@ -661,7 +649,7 @@ object CorpusPipeline {
     if ((1 to maxEpoch).exists(e =>
         fences0.get(e).exists(_ != newFences(e)))) {
       import spark.implicits._
-      mat.materializeTable(spark, st.fencesRel,
+      BatchCommit.mat.materializeTable(spark, st.fencesRel,
         fences0.keySet.filter(_ >= 1).toSeq.sorted
           .map(e => (e, newFences(e))).toDF("epoch", "fence_offset"))
     }
@@ -689,13 +677,10 @@ object CorpusPipeline {
     // were collected above.
     val rewritten = affectedByEpoch.flatMap { case (e, batches, _) =>
       batches.filter(b => survToks.contains((e, b))) }.toSet
-    if (rewritten.nonEmpty)
-      mat.materializeIncremental(spark, st.shardsRel,
-        partialsByEpoch.reduce(_ unionAll _), Seq("batch_id"))
     val affected = affectedByEpoch.flatMap(_._2).sorted.toIndexedSeq
     val emptied = affected.filterNot(rewritten)
-    emptied.foreach(p =>
-      mat.dropPartition(spark, st.shardsRel, "batch_id", p))
+    BatchCommit.replace(spark, st.shardsRel, Option.when(rewritten.nonEmpty)(
+      partialsByEpoch.reduce(_ unionAll _)), emptied)
     (affected, emptied)
   }
 
@@ -757,7 +742,7 @@ object CorpusPipeline {
   def resetFull(spark: SparkSession, st: FullState): Unit = {
     reset(spark, st.base)
     SemanticStore.reset(spark, st.sem)
-    mat.dropRelation(spark, st.benchGramsRel)
+    BatchCommit.mat.dropRelation(spark, st.benchGramsRel)
   }
 
   /** The benchmark's distinct word 8-grams — the decontam probe side,
@@ -892,7 +877,7 @@ object CorpusPipeline {
     val survEmb = emb.join(surv3.select(col(idCol).as("__sid")),
       emb(vecIdCol) === col("__sid"), "left_semi")
     graft.core.Par.run(
-      () => mat.materializeTable(spark, st.benchGramsRel,
+      () => BatchCommit.mat.materializeTable(spark, st.benchGramsRel,
         benchGrams(bench, textCol)),
       () => SemanticStore.buildFromAuto(spark, emb, survEmb, vecIdCol,
         vecCol, SemIters, SemTau, st.sem))

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.CatalogMaterializer
-
 /** Persisted, incrementally-maintained dedup state — the shape a
   * production corpus pipeline actually runs. The one-shot operators in
   * [[Dedup]] re-shingle the WHOLE corpus every invocation; a daily-crawl
@@ -58,13 +56,11 @@ object DedupStore {
   private val NumHashes = 64
   private val Bands = 16
 
-  private def mat = new CatalogMaterializer
-
   /** Drop all store tables — a fresh start for gates/specs; production
     * pipelines never call this. */
   def reset(spark: SparkSession, store: DedupStore): Unit =
     Seq(store.shinglesRel, store.bucketsRel, store.pairsRel)
-      .foreach(mat.dropRelation(spark, _))
+      .foreach(BatchCommit.mat.dropRelation(spark, _))
 
   /** Full (re)build: treat the whole corpus as batch zero. REPLACES any
     * existing store first — without the reset, a rebuild over a store
@@ -126,16 +122,10 @@ object DedupStore {
     // band them, and probe the persisted index with one equi-join.
     val groupsB = Dedup.clusters(shB)
     val repsB = groupsB.select(col("doc_id"), col("shingles"))
-    // The store side excludes this batch's own partition: a crash replay
-    // (this batchId already half-written) must not pair the batch with
-    // itself through the store — and the exclusion is a partition-pruned
-    // filter, not a scan. Also keeps the lazy pairs plan correct when it
-    // executes after writeBatch has landed this batch's shingle rows.
-    val storeSh = spark.table(store.shinglesRel)
-      .filter(col("batch_id") =!= batchId)
+    // The store side is the replay read ([[BatchCommit.without]]).
+    val storeSh = BatchCommit.without(spark, store.shinglesRel, batchId)
       .select(col("doc_id"), col("shingles"))
-    val storeBuckets = spark.table(store.bucketsRel)
-      .filter(col("batch_id") =!= batchId)
+    val storeBuckets = BatchCommit.without(spark, store.bucketsRel, batchId)
     val candidates = Dedup.bandedBuckets(repsB, NumHashes, Bands).as("a")
       .join(storeBuckets.as("b"),
         col("a.band") === col("b.band") &&
@@ -162,28 +152,11 @@ object DedupStore {
     spark.table(store.pairsRel)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
+  /** The three relations commit in one [[BatchCommit.write]]: the
+    * pairs plan reads its siblings only through the replay read. */
   private def writeBatch(spark: SparkSession, store: DedupStore,
       batchId: String, sh: DataFrame, buckets: DataFrame,
-      pairs: DataFrame): Unit = {
-    def tag(df: DataFrame) = df.withColumn("batch_id", lit(batchId))
-    // The three writes are independent (three relations) and each is
-    // correct against any interleaving of the others: the pairs plan
-    // reads the store tables THROUGH the `batch_id =!= batchId`
-    // exclusion filter (appendBatch), so a sibling write landing this
-    // batch's shingle/index rows mid-read is pruned out, and the
-    // one-shot build starts from reset (empty) tables. So they run
-    // CONCURRENTLY (guide §2.6) — three sequential partition commits
-    // collapse to ~the slowest one. Each write clears its own partition
-    // up front — dynamic overwrite with an EMPTY increment touches
-    // nothing, so a replay whose recompute came up empty would
-    // otherwise keep the stale rows (the microbatch empty-period
-    // contract, Materializer.dropPartition).
-    graft.core.Par.run(
-      Seq(store.pairsRel -> pairs, store.shinglesRel -> sh,
-        store.bucketsRel -> buckets).map { case (rel, df) => () => {
-          mat.dropPartition(spark, rel, "batch_id", batchId)
-          mat.materializeIncremental(spark, rel, tag(df), Seq("batch_id"))
-        }
-      }: _*)
-  }
+      pairs: DataFrame): Unit =
+    BatchCommit.write(spark, batchId, store.pairsRel -> pairs,
+      store.shinglesRel -> sh, store.bucketsRel -> buckets)
 }

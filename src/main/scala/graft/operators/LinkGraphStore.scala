@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.CatalogMaterializer
-
 /** Persisted, incrementally-maintained link graph — the crawl-side
   * store behind [[Graph]]'s one-shot analytics: a crawl APPENDS edges
   * (today's fetched pages link somewhere new); recomputing PageRank
@@ -45,13 +43,11 @@ final case class LinkGraphStore(schemaName: String) {
 
 object LinkGraphStore {
 
-  private def mat = new CatalogMaterializer
-
   /** Drop the store tables — a fresh start for gates/specs. */
   def reset(spark: SparkSession, store: LinkGraphStore): Unit =
     Seq(store.edgesRel, store.ranksRel, store.labelsRel,
       store.communitiesRel, store.takedownsRel)
-      .foreach(mat.dropRelation(spark, _))
+      .foreach(BatchCommit.mat.dropRelation(spark, _))
 
   /** Full build: land the base edge partition, rank from the uniform
     * vector for `iters` rounds, checkpoint the 12dp vector. REPLACES
@@ -129,11 +125,8 @@ object LinkGraphStore {
 
   private def prunePartitions(spark: SparkSession, rel: String,
       keep: Set[String]): Seq[String] = {
-    val ids = spark.table(rel)
-      .select(col("batch_id").cast("string")).distinct()
-      .collect().map(_.getString(0)).toIndexedSeq.sorted
-    val drop = ids.filterNot(keep)
-    drop.foreach(id => mat.dropPartition(spark, rel, "batch_id", id))
+    val drop = BatchCommit.batchIds(spark, rel).filterNot(keep)
+    BatchCommit.replace(spark, rel, None, drop)
     drop
   }
 
@@ -269,11 +262,11 @@ object LinkGraphStore {
       .filter(col("batch_id") === fromBatch)
       .join(victims.select(col("id")), Seq("id"), "left_semi")
       .select(col("id"), col("label")).transform(graft.core.Checkpoints.truncate)
-    val manifestExists = mat.relationExists(spark, store.takedownsRel) &&
-      !spark.table(store.takedownsRel)
-        .filter(col("batch_id") === batchId).limit(1).isEmpty
+    val manifestExists =
+      BatchCommit.mat.relationExists(spark, store.takedownsRel) &&
+        BatchCommit.batchIds(spark, store.takedownsRel).contains(batchId)
     if (!(fresh.limit(1).isEmpty && manifestExists))
-      writePartition(spark, store.takedownsRel, batchId, fresh)
+      BatchCommit.write(spark, batchId, store.takedownsRel -> fresh)
     val victimLabels = spark.table(store.takedownsRel)
       .filter(col("batch_id") === batchId)
       .select(col("label")).distinct()
@@ -380,7 +373,7 @@ object LinkGraphStore {
   private def writeCommunities(spark: SparkSession,
       store: LinkGraphStore, batchId: String,
       labeled: DataFrame): Unit =
-    writePartition(spark, store.communitiesRel, batchId,
+    BatchCommit.write(spark, batchId, store.communitiesRel ->
       labeled.select(col("id"), col("community").as("label")))
 
   /** The checkpointed component assignment at `batchId`. */
@@ -392,7 +385,7 @@ object LinkGraphStore {
 
   private def writeLabels(spark: SparkSession, store: LinkGraphStore,
       batchId: String, labeled: DataFrame): Unit =
-    writePartition(spark, store.labelsRel, batchId,
+    BatchCommit.write(spark, batchId, store.labelsRel ->
       labeled.select(col("id"), col("component").as("label")))
 
   /** The accumulated weighted edge union (src, dst, w). Stores
@@ -415,7 +408,7 @@ object LinkGraphStore {
     * batches and the fold's distinct() is sound. */
   private def writeEdges(spark: SparkSession, store: LinkGraphStore,
       batchId: String, edges: DataFrame): Unit =
-    writePartition(spark, store.edgesRel, batchId,
+    BatchCommit.write(spark, batchId, store.edgesRel ->
       edges.groupBy(col("src"), col("dst"))
         .agg(count(lit(1)).as("w")))
 
@@ -429,13 +422,6 @@ object LinkGraphStore {
 
   private def checkpoint(spark: SparkSession, store: LinkGraphStore,
       batchId: String, vector: DataFrame): Unit =
-    writePartition(spark, store.ranksRel, batchId,
+    BatchCommit.write(spark, batchId, store.ranksRel ->
       vector.select(col("id"), col("r")))
-
-  private def writePartition(spark: SparkSession, rel: String,
-      batchId: String, df: DataFrame): Unit = {
-    mat.dropPartition(spark, rel, "batch_id", batchId)
-    mat.materializeIncremental(spark, rel,
-      df.withColumn("batch_id", lit(batchId)), Seq("batch_id"))
-  }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.core.TopK
 import graft.functions.TextFunctions
-import graft.model.CatalogMaterializer
 
 /** Persisted, incrementally-maintained BM25 postings — the retrieval
   * index given the same lifecycle discipline as the dedup store
@@ -43,27 +42,10 @@ final case class PostingsStore(schemaName: String) {
 
 object PostingsStore {
 
-  private def mat = new CatalogMaterializer
-
   /** Drop both store tables — a fresh start for gates/specs. */
   def reset(spark: SparkSession, store: PostingsStore): Unit =
     Seq(store.postingsRel, store.lengthsRel)
-      .foreach(mat.dropRelation(spark, _))
-
-  /** Tokenize `docs` once into (tf, dl) — whitespace tokens, empty
-    * documents dropped (t24's corpus contract, applied here so the
-    * store is safe by construction regardless of caller filtering). */
-  private def tfDl(docs: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, DataFrame) = {
-    val tf = docs
-      .filter(length(trim(col(textCol))) > 0)
-      .select(col(idCol).as("doc_id"),
-        explode(TextFunctions.tokens(col(textCol))).as("token"))
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    (tf, dl)
-  }
+      .foreach(BatchCommit.mat.dropRelation(spark, _))
 
   /** Full (re)build: the whole corpus as batch zero. REPLACES any
     * existing store (the [[DedupStore.build]] footgun note: dynamic
@@ -92,20 +74,23 @@ object PostingsStore {
     Seq(store.postingsRel, store.lengthsRel)
       .map(StoreCompaction.compact(spark, _, keep))
 
-  /** Tokenize one batch and land its partition in both tables. Each
-    * write clears its own partition up front, so a replay whose
-    * recompute came up empty would not keep stale rows (the microbatch
-    * empty-period contract, [[DedupStore.writeBatch]]'s note). */
+  /** Tokenize one batch once into (tf, dl) — whitespace tokens, empty
+    * documents dropped (t24's corpus contract, applied here so the
+    * store is safe by construction regardless of caller filtering) —
+    * and land both partitions in one [[BatchCommit.write]]: neither
+    * plan reads a store table. */
   private def writeBatch(spark: SparkSession, store: PostingsStore,
       batchId: String, docs: DataFrame, idCol: String,
       textCol: String): Unit = {
-    val (tf, dl) = tfDl(docs, idCol, textCol)
-    def tag(df: DataFrame) = df.withColumn("batch_id", lit(batchId))
-    Seq(store.postingsRel -> tf, store.lengthsRel -> dl).foreach {
-      case (rel, df) =>
-        mat.dropPartition(spark, rel, "batch_id", batchId)
-        mat.materializeIncremental(spark, rel, tag(df), Seq("batch_id"))
-    }
+    val tf = docs
+      .filter(length(trim(col(textCol))) > 0)
+      .select(col(idCol).as("doc_id"),
+        explode(TextFunctions.tokens(col(textCol))).as("token"))
+      .groupBy(col("doc_id"), col("token"))
+      .agg(count(lit(1)).as("tf"))
+    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    BatchCommit.write(spark, batchId, store.postingsRel -> tf,
+      store.lengthsRel -> dl)
   }
 
   /** BM25 top-k (k1 = 1.2, b = 0.75) for a provided `(token)` query

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Caches
-import graft.model.CatalogMaterializer
 
 /** Persisted, incrementally-maintained SEMANTIC dedup state — the
   * production lifecycle for [[Similarity.semanticDedup]] (d13), exactly
@@ -93,12 +92,10 @@ object SemanticStore {
     buildFrom(spark, train, ingest, idCol, vecCol, autoK(train.count()),
       iters, threshold, store, batchId)
 
-  private def mat = new CatalogMaterializer
-
   /** Drop both store tables — a fresh start for gates/specs. */
   def reset(spark: SparkSession, store: SemanticStore): Unit =
     Seq(store.codebookRel, store.vectorsRel)
-      .foreach(mat.dropRelation(spark, _))
+      .foreach(BatchCommit.mat.dropRelation(spark, _))
 
   /** Full (re)build: train the codebook on `history` and ingest it as
     * batch zero. REPLACES any existing store (same rationale as
@@ -134,7 +131,7 @@ object SemanticStore {
     val cbDf = codebook.zipWithIndex.toSeq
       .map { case ((cv, cn), i) => (i, cv.toSeq, cn, threshold) }
       .toDF("cid", "cv", "cn", "tau")
-    mat.materializeTable(spark, store.codebookRel, cbDf)
+    BatchCommit.mat.materializeTable(spark, store.codebookRel, cbDf)
     this.ingest(spark, ingest, idCol, vecCol, store, batchId,
       firstBatch = true)
   }
@@ -321,10 +318,7 @@ object SemanticStore {
     * Returns (rewritten, dropped) partition names. */
   private[operators] def commitRepair(spark: SparkSession,
       store: SemanticStore, plan: RepairPlan): (Seq[String], Seq[String]) = {
-    plan.rows.foreach(r =>
-      mat.materializeIncremental(spark, store.vectorsRel, r, Seq("batch_id")))
-    plan.emptied.foreach(p =>
-      mat.dropPartition(spark, store.vectorsRel, "batch_id", p))
+    BatchCommit.replace(spark, store.vectorsRel, plan.rows, plan.emptied)
     (plan.parts, plan.emptied)
   }
 
@@ -359,13 +353,9 @@ object SemanticStore {
 
   private def ingest(spark: SparkSession, batch: DataFrame, idCol: String,
       vecCol: String, store: SemanticStore,
-      batchId: String, firstBatch: Boolean): Unit = {
-    val rows = verdicts(spark, batch, idCol, vecCol, store,
-      batchId, firstBatch)
-    mat.dropPartition(spark, store.vectorsRel, "batch_id", batchId)
-    mat.materializeIncremental(spark, store.vectorsRel, rows,
-      Seq("batch_id"))
-  }
+      batchId: String, firstBatch: Boolean): Unit =
+    BatchCommit.write(spark, batchId, store.vectorsRel ->
+      verdicts(spark, batch, idCol, vecCol, store, batchId, firstBatch))
 
   /** The compute half of an ingest — the batch's `(cid, vid, v, nrm,
     * keep, batch_id)` rows, nothing written. Split out (the
@@ -382,15 +372,13 @@ object SemanticStore {
       .select(col("vid"), col("cid"), col("v"), col("nrm")))
     val batchPred = assigned.select(col("cid"), col("vid").as("pvid"),
       col("v").as("pv"), col("nrm").as("pn"))
-    // The store side excludes this batch's own partition (crash-replay
-    // correctness — a half-written replay must not pair the batch with
-    // itself through the store; the exclusion is partition-pruned).
+    // The store side is the replay read ([[BatchCommit.without]]).
     val preds =
       if (firstBatch) batchPred
-      else batchPred.union(spark.table(store.vectorsRel)
-        .filter(col("batch_id") =!= batchId)
-        .select(col("cid"), col("vid").as("pvid"), col("v").as("pv"),
-          col("nrm").as("pn")))
+      else batchPred.union(
+        BatchCommit.without(spark, store.vectorsRel, batchId)
+          .select(col("cid"), col("vid").as("pvid"), col("v").as("pv"),
+            col("nrm").as("pn")))
     val dropped = assigned.join(preds, "cid")
       .filter(col("pvid") < col("vid") &&
         Similarity.sim(col("pv"), col("pn"), col("v"), col("nrm"))

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.CatalogMaterializer
-
 /** Persisted, incrementally-maintained SPAN-dedup state — the
   * [[DedupStore]]/[[SemanticStore]] lifecycle applied to the substring
   * tier ([[Dedup.spanDedup]]): a daily crawl rewrites *today's batch
@@ -43,11 +41,9 @@ final case class SpanStore(schemaName: String) {
 
 object SpanStore {
 
-  private def mat = new CatalogMaterializer
-
   /** Drop the store — a fresh start for gates/specs. */
   def reset(spark: SparkSession, store: SpanStore): Unit =
-    mat.dropRelation(spark, store.gramsRel)
+    BatchCommit.mat.dropRelation(spark, store.gramsRel)
 
   /** Full (re)build: the corpus as batch zero. Returns the corpus's
     * rewrite (the one-shot [[Dedup.spanDedup]]) and stores its gram
@@ -58,7 +54,7 @@ object SpanStore {
     reset(spark, store)
     val grams = Dedup.spanGramStarts(
       Dedup.spanTokens(corpus, idCol, textCol), k)
-    writeBatch(spark, store, batchId, grams)
+    BatchCommit.write(spark, batchId, store.gramsRel -> grams)
     Dedup.spanDedup(corpus, idCol, textCol, k)
   }
 
@@ -71,18 +67,9 @@ object SpanStore {
       batchId: String): DataFrame = {
     val toks = Dedup.spanTokens(batch, idCol, textCol)
     val grams = graft.core.Caches.persist(Dedup.spanGramStarts(toks, k))
-    // The history snapshot is pinned BY NAME at call time (one driver
-    // row per batch — bounded): the returned rewrite is lazy, and a
-    // plain =!= batchId exclusion would let a plan executed after a
-    // LATER append see future batches' grams — marking this batch's
-    // first occurrences duplicate against documents that come after it.
-    // Pinning also excludes this batchId's own half-written partition
-    // on crash replay; both filters partition-prune.
-    val existing = spark.table(store.gramsRel)
-      .select(col("batch_id")).distinct().collect()
-      .map(_.getString(0)).toSeq.filterNot(_ == batchId)
-    val known = spark.table(store.gramsRel)
-      .filter(col("batch_id").isin(existing: _*))
+    // The returned rewrite is lazy: the replay read pins history by name,
+    // so a plan run after a LATER append never sees that append's grams.
+    val known = BatchCommit.without(spark, store.gramsRel, batchId)
       .select(col("gh")).distinct()
       .withColumn("in_store", lit(true))
     val withStore = grams.join(known, Seq("gh"), "left")
@@ -91,7 +78,7 @@ object SpanStore {
       .filter(coalesce(col("in_store"), lit(false)) ||
         !(col("doc_id") === col("fd") && col("i") === col("fs")))
     val rewritten = Dedup.spanRewrite(toks, dupStarts, k)
-    writeBatch(spark, store, batchId, grams)
+    BatchCommit.write(spark, batchId, store.gramsRel -> grams)
     rewritten
   }
 
@@ -119,15 +106,5 @@ object SpanStore {
       .join(Dedup.spanFirstOccurrences(occ), col("gh") === col("gh2"))
       .filter(!(col("doc_id") === col("fd") && col("i") === col("fs")))
     Dedup.spanRewrite(Dedup.spanTokens(docs, idCol, textCol), dupStarts, k)
-  }
-
-  private def writeBatch(spark: SparkSession, store: SpanStore,
-      batchId: String, grams: DataFrame): Unit = {
-    // Clear-then-write: dynamic overwrite with an empty increment
-    // touches nothing, so a replay whose recompute came up empty would
-    // otherwise keep stale rows (the DedupStore contract).
-    mat.dropPartition(spark, store.gramsRel, "batch_id", batchId)
-    mat.materializeIncremental(spark, store.gramsRel,
-      grams.withColumn("batch_id", lit(batchId)), Seq("batch_id"))
   }
 }

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.model.CatalogMaterializer
-
 /** Small-file compaction for the partition-per-batch incremental stores
   * ([[DedupStore]], [[VectorIndex]] codes — any relation the engine
   * maintains as one partition per arriving batch). The append path
@@ -58,14 +56,6 @@ object StoreCompaction {
         s"files $filesBefore -> $filesAfter"
   }
 
-  private def mat = new CatalogMaterializer
-
-  /** Batch partitions currently present, sorted. */
-  def batchIds(spark: SparkSession, relation: String,
-      partCol: String = "batch_id"): Seq[String] =
-    spark.table(relation).select(col(partCol).cast("string"))
-      .distinct().collect().map(_.getString(0)).sorted.toIndexedSeq
-
   /** Part-file count under the relation's current location — the
     * metadata population compaction exists to bound. */
   def fileCount(spark: SparkSession, relation: String): Int = {
@@ -87,30 +77,29 @@ object StoreCompaction {
     * `compacted` partition) into `compacted`, rewritten as
     * `targetFiles` files. No-op when nothing new is foldable. */
   def compact(spark: SparkSession, relation: String, keep: Set[String],
-      targetFiles: Int = 1, partCol: String = "batch_id"): Stats = {
-    val ids = batchIds(spark, relation, partCol)
+      targetFiles: Int = 1): Stats = {
+    val ids = BatchCommit.batchIds(spark, relation)
     val fold = ids.filterNot(id => keep(id) && id != Label)
     val filesBefore = fileCount(spark, relation)
     if (fold.isEmpty || fold == Seq(Label))
       return Stats(relation, Nil, ids.size, ids.size, filesBefore,
         filesBefore)
     val folded = spark.table(relation)
-      .filter(col(partCol).isin(fold: _*))
-      .drop(partCol)
+      .filter(col("batch_id").isin(fold: _*))
+      .drop("batch_id")
       // Replay convergence (see protocol above) — and harmless when the
       // prior run completed: partitions are disjoint row sets.
       .distinct()
-      .withColumn(partCol, lit(Label))
+      .withColumn("batch_id", lit(Label))
       .repartition(targetFiles)
       // The overwrite replaces the `compacted` partition the fold plan
       // reads; truncate lineage first (same pattern as the hourly-mart
       // merge). Maintenance-window sized: one store's rows, spillable.
       .transform(graft.core.Checkpoints.truncate)
-    mat.materializeIncremental(spark, relation, folded, Seq(partCol))
-    fold.filter(_ != Label)
-      .foreach(id => mat.dropPartition(spark, relation, partCol, id))
-    Stats(relation, fold.filterNot(_ == Label),
-      ids.size, batchIds(spark, relation, partCol).size,
+    val originals = fold.filterNot(_ == Label)
+    BatchCommit.replace(spark, relation, Some(folded), originals)
+    Stats(relation, originals, ids.size,
+      BatchCommit.batchIds(spark, relation).size,
       filesBefore, fileCount(spark, relation))
   }
 

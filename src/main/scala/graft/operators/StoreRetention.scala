@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.CatalogMaterializer
-
 /** Targeted deletion from the partition-per-batch incremental stores —
   * the takedown / right-to-be-forgotten path. A 100 TB corpus pipeline
   * WILL receive removal requests (DMCA, GDPR, opt-outs), and the naive
@@ -24,11 +22,10 @@ import graft.model.CatalogMaterializer
   *     this plan reads; bounded by the victim set's spread, not the
   *     store);
   *  3. WRITE — those partitions in one dynamic partition overwrite
-  *     (job-atomic per commit). A partition the delete emptied is
-  *     DROPPED instead — the empty-increment contract: dynamic overwrite
-  *     with an empty frame touches nothing, which would silently RETAIN
-  *     the victim rows. When every affected partition empties, steps 2
-  *     and 3 are skipped and only the drops run.
+  *     (job-atomic per commit), and a partition the delete emptied is
+  *     DROPPED instead: [[BatchCommit.replace]] and its empty-increment
+  *     contract. When every affected partition empties, steps 2 and 3
+  *     are skipped and only the drops run.
   *
   * Victims arrive as a DataFrame of ids (takedown lists run to millions
   * — a join, never an `isin` literal), matched by one or more
@@ -53,17 +50,15 @@ object StoreRetention {
     * the two sides' columns. */
   type Match = (DataFrame, DataFrame) => Column
 
-  private def mat = new CatalogMaterializer
-
   /** Delete every row of `relation` that ANY of `matches` pairs with a
     * row of `ids`. Rewrites only the partitions containing matches. */
   def deleteRows(spark: SparkSession, relation: String, ids: DataFrame,
-      matches: Seq[Match], partCol: String = "batch_id"): DeleteStats = {
+      matches: Seq[Match]): DeleteStats = {
     require(matches.nonEmpty, s"deleteRows($relation) needs a match condition")
     val t = spark.table(relation)
     def remaining(df: DataFrame): DataFrame =
       matches.foldLeft(df)((d, m) => d.join(ids, m(d, ids), "left_anti"))
-    val part = col(partCol).cast("string").as("p")
+    val part = col("batch_id").cast("string").as("p")
     val counts = t.select(part, lit(1L).as("n"), lit(0L).as("r"))
       .unionAll(remaining(t).select(part, lit(0L).as("n"), lit(1L).as("r")))
       .groupBy(col("p"))
@@ -71,16 +66,11 @@ object StoreRetention {
       .filter(col("n") =!= col("r"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toIndexedSeq
-    if (counts.isEmpty)
-      return DeleteStats(relation, Nil, Nil, 0L)
     val (kept, emptied) = counts.partition(_._3 > 0)
-    if (kept.nonEmpty)
-      mat.materializeIncremental(spark, relation,
-        remaining(t.filter(col(partCol).isin(kept.map(_._1): _*)))
-          .transform(graft.core.Checkpoints.truncate),
-        Seq(partCol))
     val dropped = emptied.map(_._1)
-    dropped.foreach(p => mat.dropPartition(spark, relation, partCol, p))
+    BatchCommit.replace(spark, relation, Option.when(kept.nonEmpty)(
+      remaining(t.filter(col("batch_id").isin(kept.map(_._1): _*)))
+        .transform(graft.core.Checkpoints.truncate)), dropped)
     DeleteStats(relation, counts.map(_._1), dropped,
       counts.map(c => c._2 - c._3).sum)
   }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.TopK
-import graft.model.CatalogMaterializer
 
 /** Persisted, appendable IVF-PQ index — the production ANN lifecycle
   * that the in-query operators ([[Similarity.ivfPqTopK]]) deliberately
@@ -51,11 +50,9 @@ object VectorIndex {
   private val NCodes = 16
   private val Subspaces = 4
 
-  private def mat = new CatalogMaterializer
-
   def reset(spark: SparkSession, index: VectorIndex): Unit =
     Seq(index.codebookRel, index.codesRel)
-      .foreach(mat.dropRelation(spark, _))
+      .foreach(BatchCommit.mat.dropRelation(spark, _))
 
   /** Full (re)build: freeze the codebook — the seed prefix by default,
     * or ([[Similarity.trainedIvfCodebook]], `trainIters > 0`) the
@@ -87,7 +84,7 @@ object VectorIndex {
         ("coarse", cid, v.toSeq, nr) } ++
       prefix.take(NCodes).zipWithIndex.map { case ((_, v, nr), j) =>
         ("pq", j.toLong, v.toSeq, nr) }
-    mat.materializeTable(spark, index.codebookRel,
+    BatchCommit.mat.materializeTable(spark, index.codebookRel,
       rows.toDF("kind", "ord", "v", "nrm"))
     writeCodes(spark, n, index, batchId)
   }
@@ -148,9 +145,6 @@ object VectorIndex {
       .select(col("cid") +: col("vid") +:
         (0 until Subspaces).map(sp =>
           Similarity.pqCode(col("v"), sp, centers, subDim).as(s"c$sp")): _*)
-      .withColumn("batch_id", lit(batchId))
-    mat.dropPartition(spark, index.codesRel, "batch_id", batchId)
-    mat.materializeIncremental(spark, index.codesRel, encoded,
-      Seq("batch_id"))
+    BatchCommit.write(spark, batchId, index.codesRel -> encoded)
   }
 }

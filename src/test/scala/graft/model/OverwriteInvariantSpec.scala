@@ -21,7 +21,8 @@ import graft.SparkSuite
   * invariant is pinned structurally here: every `.insertInto(` call
   * site in the main tree must live in Materializer.scala (the two audited
   * materializer paths), and the audited overwrite path must remain the
-  * dynamic one. */
+  * dynamic one. A second pin keeps every partition write and drop of the
+  * batch stores in [[graft.operators.BatchCommit]]. */
 class OverwriteInvariantSpec extends SparkSuite {
 
   private def mainSources: Seq[Path] = {
@@ -30,15 +31,17 @@ class OverwriteInvariantSpec extends SparkSuite {
       .filter(p => p.toString.endsWith(".scala")).toSeq
   }
 
+  /** Strip line comments and scaladoc so prose mentions don't count. */
+  private def stripComments(text: String): String =
+    text.linesIterator
+      .map(l => l.replaceAll("//.*$", ""))
+      .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("/*"))
+      .mkString("\n")
+
   test("every insertInto call site lives in the audited materializer " +
       "(Materializer.scala) — no un-audited writer can hit the sticky dynamic conf") {
     val offenders = mainSources.flatMap { p =>
-      val text = Files.readString(p)
-      // Strip line comments and scaladoc so prose mentions don't count.
-      val code = text.linesIterator
-        .map(l => l.replaceAll("//.*$", ""))
-        .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("/*"))
-        .mkString("\n")
+      val code = stripComments(Files.readString(p))
       if (code.contains(".insertInto(") &&
           !p.toString.endsWith("model/Materializer.scala"))
         Some(p.toString) else None
@@ -49,6 +52,23 @@ class OverwriteInvariantSpec extends SparkSuite {
         "(CatalogMaterializer.materializeIncremental); a static-overwrite " +
         "insertInto would silently keep stale partitions. Route writes " +
         "through CatalogMaterializer or restore the conf around the write.")
+  }
+
+  test("the stores' partition writes and drops live in BatchCommit " +
+      "alone") {
+    val operators = Paths.get("src/main/scala/graft/operators")
+    val offenders = mainSources
+      .filter(p => p.startsWith(operators) &&
+        !p.toString.endsWith("operators/BatchCommit.scala"))
+      .filter { p =>
+        val code = stripComments(Files.readString(p))
+        code.contains("dropPartition(") ||
+          code.contains("materializeIncremental(")
+      }.map(_.toString)
+    assert(offenders.isEmpty,
+      s"store partition writes outside BatchCommit: $offenders — the " +
+        "drop-then-overwrite and rewrite-then-drop commits of the batch " +
+        "stores are written once, in BatchCommit.write and .replace.")
   }
 
   test("the audited overwrite insertInto is the dynamic-conf one") {

@@ -80,7 +80,7 @@ class DedupStoreSpec extends SparkSuite {
     // b1 partition would survive next to the fresh base and every doc in
     // it would be double-counted.
     DedupStore.build(spark, docs, "doc_id", "text", T, store)
-    assert(StoreCompaction.batchIds(spark, store.shinglesRel) ==
+    assert(BatchCommit.batchIds(spark, store.shinglesRel) ==
       Seq("base"))
     assert(pairsOf(DedupStore.allPairs(spark, store)) == oneShot)
     assert(DedupStore.allPairs(spark, store).count() == oneShot.size)

@@ -48,7 +48,7 @@ class StoreCompactionSpec extends SparkSuite {
     }
     assert(pairsOf(DedupStore.allPairs(spark, store)) == before)
     // The replay horizon survived as its own partition.
-    assert(StoreCompaction.batchIds(spark, store.shinglesRel) ==
+    assert(BatchCommit.batchIds(spark, store.shinglesRel) ==
       Seq("b2", StoreCompaction.Label))
     DedupStore.reset(spark, store)
   }

@@ -161,7 +161,7 @@ class StoreRetentionSpec extends SparkSuite {
     val stats = StoreRetention.deleteDocs(spark, store, doomed)
     assert(stats == legacy)
     assert(stats.head.dropped == Seq("doomed"), stats.head.toString)
-    assert(StoreCompaction.batchIds(spark, store.shinglesRel) ==
+    assert(BatchCommit.batchIds(spark, store.shinglesRel) ==
       Seq("base"))
     // The survivors equal a store that never saw the doomed batch.
     val oneShot = Dedup.minhashLshPairs(

@@ -50,7 +50,7 @@ class VectorIndexSpec extends SparkSuite {
     // b1 partition would survive next to the fresh base and its vectors
     // would score twice in every probe.
     VectorIndex.build(spark, emb, "vec_id", "embedding", index)
-    assert(StoreCompaction.batchIds(spark, index.codesRel) == Seq("base"))
+    assert(BatchCommit.batchIds(spark, index.codesRel) == Seq("base"))
     assert(rows(VectorIndex.topK(spark, queries, "vec_id", "embedding",
       index, k = 5)) == oneShot)
     VectorIndex.reset(spark, index)
